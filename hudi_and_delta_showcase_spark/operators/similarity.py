@@ -57,20 +57,6 @@ def _bound_query_side(
     )
 
 
-def _dot(a: F.Column, b: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: F.Column) -> F.Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
 def with_cosine(
     df: DataFrame, a_col: str, b_col: str, out: str = "cosine"
 ) -> DataFrame:

@@ -25,18 +25,23 @@ Scale notes (100 TB):
   file-list scans — no basePath/partition-inference coupling across
   commits.
 * Upsert cost is O(files actually holding the batch's keys), not
-  O(table): partition pruning first, then key-level file skipping via
-  per-file record-key min/max ranges stored in the commit manifest
-  (Hudi's bloom/range index tier) — see ``_probe_key_hits``. After an
-  ``optimize(cluster_by=...)`` the ranges are disjoint and an upsert
-  touches only the file groups its keys land in.
-* The source side of an upsert broadcasts when small (CDC batches almost
-  always are); the rewrite never shuffles the un-affected part of the
-  table — those files are carried over by reference in the manifest.
+  O(table), and the file choice costs no Spark job: the batch is
+  materialized once, its keys, partition values and bucket ids are
+  collected in one job, and ``_plan_rewrite`` prunes the manifest's
+  file list on the driver — partition, bucket, then each file's
+  record-key [min, max] from the commit manifest (Hudi's range index
+  tier), checked exactly against the sorted batch keys. A batch whose
+  keys no live file can hold (inserts past every key range) is a pure
+  append: only the batch is written, every file carries over.
+* The source side of an upsert broadcasts (CDC batches are small, and
+  its keys already went through the driver to plan); the rewrite never
+  shuffles the un-affected part of the table — those files are carried
+  over by reference in the manifest.
 """
 
 from __future__ import annotations
 
+import bisect
 import copy
 import json
 import os
@@ -1855,10 +1860,15 @@ class LakehouseTable:
     ) -> mf.Commit:
         """C2 (CoW) / C3 (MoR) keyed upsert with precombine dedup.
 
-        CoW: rewrites only partitions containing source keys; untouched
-        files carry over (their rows keep the old commit time —
-        README.md:470-491). MoR: appends the batch as log files; base
-        untouched until compact() (README.md:896-916).
+        CoW: the batch is materialized once, and ``_plan_rewrite``
+        picks on the driver the files that can hold its keys
+        (partition, bucket, exact key-range check; record-index and
+        bloom probes when enabled). Only those are rewritten; the rest
+        carry over (their rows keep the old commit time —
+        README.md:470-491). When no file can hold a batch key the
+        commit is a pure append of the batch. MoR: appends the batch
+        as log files; base untouched until compact()
+        (README.md:896-916).
 
         ``txn_app_id``/``txn_version`` make the upsert IDEMPOTENT per
         writer (Delta ``txnAppId``/``txnVersion``): if this (app,
@@ -1928,43 +1938,15 @@ class LakehouseTable:
             commit = self._publish(commit)
             return commit
 
-        # ---- CoW: partition-scoped rewrite (C8) ----
-        # Non-global index: the anti-join key includes the partition
-        # column, and only partitions present in the source are rewritten
-        # — O(affected partitions), never O(table).
-        affected, untouched = self._split_affected(prev.files, source)
-        # Bucket-index tier: hash-route the batch to its buckets —
-        # candidate files shrink to the touched buckets with no probe
-        # scan of table data (Hudi BUCKET index).
-        bucket_skipped: list[str] = []
-        if self.bucket_count:
-            affected, bucket_skipped = self._split_bucket_affected(
-                affected, stamped
-            )
-            untouched = untouched + bucket_skipped
-        # Second pruning tier — key-level file skipping (Hudi bloom/range
-        # index): within affected partitions, rewrite only files whose
-        # footer key range intersects the batch. At 100 TB this is the
-        # difference between rewriting a partition and rewriting the
-        # handful of file groups the keys actually live in.
-        ri_skipped: list[str] = []
-        if self.record_index:
-            # exact tier: the record index names the files holding the
-            # batch's keys — no range/bloom false positives
-            affected, ri_skipped = self._probe_ri_hits(
-                affected, prev, stamped
-            )
-            untouched = untouched + ri_skipped
-        affected, range_skipped = self._probe_key_hits(
-            affected, prev.key_ranges, stamped
+        # ---- CoW: rewrite only the files that can hold a batch key ----
+        # The batch feeds the plan, the merge, the write and (CDC) the
+        # change split: materialize it once, which also freezes the
+        # monotonically_increasing_id in _hoodie_commit_seqno. The lazy
+        # checkpoint is filled by the plan collect itself — one job.
+        stamped = stamped.localCheckpoint(eager=False)
+        affected, untouched, skipped = self._rewrite_candidates(
+            prev, stamped
         )
-        untouched = untouched + range_skipped
-        bloom_skipped: list[str] = []
-        if self.bloom_index:
-            affected, bloom_skipped = self._probe_bloom_hits(
-                affected, prev.key_blooms, stamped
-            )
-            untouched = untouched + bloom_skipped
         cdc_added: list[str] = []
         add_only_cdc = False
         if affected:
@@ -1975,15 +1957,9 @@ class LakehouseTable:
             )
             if self.cdc_enabled:
                 # CDC consumes target TWICE (kept anti-join + pre-image
-                # semi-join) and the batch THREE times (merge, post,
-                # insert split): a lazy localCheckpoint materializes
-                # each once on first use — the affected files are
-                # scanned once instead of twice and the batch's
-                # dedup/constraint pipeline runs once instead of three
-                # times, at toy scale also 3 fewer fixed-cost jobs
-                # (measured 10 -> 7 per CDC upsert).
+                # semi-join): a lazy localCheckpoint scans the affected
+                # files once instead of twice
                 target = target.localCheckpoint(eager=False)
-                stamped = stamped.localCheckpoint(eager=False)
             target = target.alias("t")
             keys = self._resolution_cols()
             if self.row_tracking:
@@ -2009,9 +1985,9 @@ class LakehouseTable:
                     )
                     .drop("__old_rid", *[f"__rk_{c}" for c in keys])
                 )
-            source_keys = F.broadcast(
-                stamped.select(*keys).distinct().alias("s")
-            )
+            # precombine already made the keys unique, and a left-anti
+            # join ignores duplicates anyway: no distinct
+            source_keys = F.broadcast(stamped.select(*keys).alias("s"))
             # null-safe equality: a null partition value must MATCH the
             # incoming null (plain `=` never matches null, so the old
             # row would escape the anti-join and duplicate the key)
@@ -2062,10 +2038,7 @@ class LakehouseTable:
             stats={
                 "rewritten_files": len(affected),
                 "carried_over_files": len(untouched),
-                "bucket_skipped_files": len(bucket_skipped),
-                "key_range_skipped_files": len(range_skipped),
-                "bloom_skipped_files": len(bloom_skipped),
-                "record_index_skipped_files": len(ri_skipped),
+                **skipped,
                 "written_files": len(new_files),
                 **({"cdc_add_only": True} if add_only_cdc else {}),
                 **(extra_stats or {}),
@@ -2188,31 +2161,17 @@ class LakehouseTable:
         kcols = self._resolution_cols()
         # the caller's key frame is often a full table-read pipeline
         # (delete WHERE <pred> passes t.read().filter(...)); it is
-        # consumed 2-3 times below (partition split / range-bloom
-        # probes / the delete join itself) — one lazy localCheckpoint
-        # materializes the O(deleted keys) distinct set on first use
-        # instead of re-running the caller's scan per consumer (r14,
-        # guide §5: at scale each re-evaluation is a full scan)
+        # consumed by the plan and by the delete join — one lazy
+        # localCheckpoint materializes the O(deleted keys) distinct set
+        # on first use instead of re-running the caller's scan per
+        # consumer (at scale each re-evaluation is a full scan)
         keys = (
             self._physical(keys).select(*kcols).distinct()
             .localCheckpoint(eager=False)
         )
-        affected, untouched = self._split_affected(prev.files, keys)
-        stamped_keys = self._stamp_meta(keys, commit_time)
-        if self.bucket_count:
-            affected, bucket_skipped = self._split_bucket_affected(
-                affected, stamped_keys
-            )
-            untouched = untouched + bucket_skipped
-        affected, range_skipped = self._probe_key_hits(
-            affected, prev.key_ranges, stamped_keys
+        affected, untouched, skipped = self._rewrite_candidates(
+            prev, self._stamp_meta(keys, commit_time)
         )
-        untouched = untouched + range_skipped
-        if self.bloom_index:
-            affected, bloom_skipped = self._probe_bloom_hits(
-                affected, prev.key_blooms, stamped_keys
-            )
-            untouched = untouched + bloom_skipped
 
         cond = None
         for c in kcols:
@@ -2263,7 +2222,7 @@ class LakehouseTable:
                     "rewritten_files": 0,
                     "dv_candidate_files": len(affected),
                     "dv_files_added": len(dv_added),
-                    "key_range_skipped_files": len(range_skipped),
+                    **skipped,
                 },
                 key_ranges=prev.key_ranges,
                 col_stats=prev.col_stats,
@@ -2306,7 +2265,7 @@ class LakehouseTable:
             log_files=[],
             stats={
                 "rewritten_files": len(affected),
-                "key_range_skipped_files": len(range_skipped),
+                **skipped,
             },
             dv_files=list(prev.dv_files),
             txn=dict(prev.txn),
@@ -3189,22 +3148,6 @@ class LakehouseTable:
             for p in fsio.walk_files(out, ".parquet")
         )
 
-    def _file_key_ranges(self, rel_files: list[str]) -> dict[str, list[str]]:
-        """Per-file [min, max] of ``_hoodie_record_key`` from parquet
-        FOOTERS — metadata-only, O(files) driver work (the same cost
-        class as the manifest write itself; Hudi stores the identical
-        ranges in its commit metadata for bloom-index pruning).
-
-        Parquet may truncate binary stats: the reported min/max are then
-        valid loose BOUNDS, so range pruning stays sound (a file is
-        never skipped while holding a matching key)."""
-        stats = self._file_column_stats(rel_files, ["_hoodie_record_key"])
-        return {
-            f: cols["_hoodie_record_key"]
-            for f, cols in stats.items()
-            if "_hoodie_record_key" in cols
-        }
-
     def _index_fields(
         self,
         new_files: list[str],
@@ -3717,118 +3660,115 @@ class LakehouseTable:
         hit = [f for f in affected if f in hits]
         return hit, [f for f in affected if f not in hits]
 
-    def _probe_key_hits(
-        self,
-        affected: list[str],
-        ranges: dict[str, list[str]],
-        stamped: DataFrame,
-    ) -> tuple[list[str], list[str]]:
-        """Key-level file skipping: of the partition-affected files,
-        find those whose record-key range actually intersects the source
-        batch's keys. The probe is a distributed broadcast join — file
-        range METADATA broadcast to the source keys, never the reverse —
-        so it scales with the batch, not the table. Files without known
-        ranges are conservatively treated as hit."""
-        if len(affected) <= 1:
-            return affected, []  # nothing to prune; skip the probe job
-        unknown = [f for f in affected if f not in ranges]
-        ranged = [f for f in affected if f in ranges]
-        if not ranged:
-            return affected, []
-        # Cheap driver-side payoff check: when file key ranges mutually
-        # overlap (hash-distributed writes, no clustering), every file
-        # intersects every batch and the probe job is pure overhead.
-        # Pruning only pays when files are mostly DISJOINT in key space
-        # (post optimize(cluster_by=...)); measure that in O(n log n).
-        spans = sorted(ranges[f] for f in ranged)
-        disjoint = sum(
-            1
-            for i in range(1, len(spans))
-            if spans[i][0] > spans[i - 1][1]
+    def _rewrite_candidates(
+        self, prev: mf.Commit, stamped: DataFrame
+    ) -> tuple[list[str], list[str], dict[str, int]]:
+        """(files to rewrite, files carried over, ``<tier>_skipped_files``
+        counts) for a CoW upsert or delete of the ``stamped`` batch:
+        the driver-side plan, then the opt-in record-index and bloom
+        probes over what the plan left."""
+        affected, carried, skipped = self._plan_rewrite(
+            prev, self._plan_rows(stamped)
         )
-        if disjoint < len(spans) // 2:
-            return affected, []
-        # Global index: the key's previous row may live in ANY partition,
-        # so the probe matches on key range alone; non-global also
-        # requires the partition to match — against each file's OWN
-        # spec column (files written before a partition evolution carry
-        # a different spec; see evolve_partitioning). The source side
-        # carries one array slot per live spec column and each file
-        # row carries the 1-based slot index of ITS spec (0 = no known
-        # spec / column missing from the batch: match-all,
-        # conservative).
-        partitioned = bool(self.partition_by) and not self.global_index
-        spec_cols: list[str] = []
-        pi_of: dict[str, int] = {}
-        if partitioned:
-            src_cols = set(stamped.columns)
-            spec_cols = [
-                c
-                for c in dict.fromkeys(
-                    s for s in self.partition_specs if s
-                )
-                if c in src_cols
+        ri_missed: list[str] = []
+        bloom_missed: list[str] = []
+        if self.record_index:
+            affected, ri_missed = self._probe_ri_hits(
+                affected, prev, stamped
+            )
+        if self.bloom_index:
+            affected, bloom_missed = self._probe_bloom_hits(
+                affected, prev.key_blooms, stamped
+            )
+        skipped["record_index_skipped_files"] = len(ri_missed)
+        skipped["bloom_skipped_files"] = len(bloom_missed)
+        return affected, carried + ri_missed + bloom_missed, skipped
+
+    def _plan_rows(self, stamped: DataFrame) -> list:
+        """The planner's view of a batch, collected in one job: each
+        row's ``_hoodie_record_key``, its value of every live
+        partition-spec column as the string its partition dir encodes,
+        and its bucket id (``__bk``) on bucketed tables."""
+        cols = [F.col("_hoodie_record_key")]
+        if self.partition_by and not self.global_index:
+            cols += [
+                F.col(c).cast("string").alias(c)
+                for c in dict.fromkeys(s for s in self.partition_specs if s)
+                if c in stamped.columns
             ]
-            for f in ranged:
-                idx, _pv = self._partition_spec_value_of(f)
-                col = (
-                    self.partition_specs[idx]
-                    if 0 <= idx < len(self.partition_specs)
-                    else None
+        if self.bucket_count:
+            cols.append(self._bucket_expr().alias("__bk"))
+        return stamped.select(*cols).collect()
+
+    def _plan_rewrite(
+        self, prev: mf.Commit, plan_rows: list
+    ) -> tuple[list[str], list[str], dict[str, int]]:
+        """Split ``prev.files`` into (files that can hold a batch key,
+        files carried over, skipped counts per tier) on the driver —
+        no Spark job. ``plan_rows`` come from ``_plan_rows``. Tiers, in
+        order; a file a tier knows nothing about stays a candidate:
+
+        * partition — a file written under spec column ``c`` (its own
+          spec, see ``evolve_partitioning``) needs a batch row with its
+          ``c`` value; null values match the hive default partition.
+          A global index skips this tier: a key's old row may live in
+          any partition.
+        * bucket — the file's ``__bk=`` id is one of the batch's.
+        * key range — some batch key of the file's partition (every
+          batch key when the file is not partition-matched) lies in the
+          file's manifest [min, max], found by bisecting the sorted
+          keys; a file whose recorded row count is 0 holds no key, and
+          an empty batch has none to hold.
+        """
+        fields = plan_rows[0].__fields__ if plan_rows else []
+        spec_cols = [
+            c for c in fields if c not in ("_hoodie_record_key", "__bk")
+        ]
+        all_keys = sorted(r["_hoodie_record_key"] for r in plan_rows)
+        part_keys: dict[tuple[str, str], list[str]] = {}
+        for r in plan_rows:
+            for c in spec_cols:
+                v = HIVE_DEFAULT_PARTITION if r[c] is None else r[c]
+                part_keys.setdefault((c, v), []).append(
+                    r["_hoodie_record_key"]
                 )
-                pi_of[f] = (
-                    spec_cols.index(col) + 1
-                    if col is not None and col in spec_cols
-                    else 0
-                )
-        pp_of = {f: self._partition_spec_value_of(f)[1] for f in ranged}
-        ranges_df = self.spark.createDataFrame(
-            [
-                (f, pi_of.get(f, 0), pp_of[f], ranges[f][0], ranges[f][1])
-                for f in ranged
-            ],
-            "f string, pi int, pp string, kmin string, kmax string",
+        for ks in part_keys.values():
+            ks.sort()
+        buckets = {r["__bk"] for r in plan_rows} if self.bucket_count else None
+        affected: list[str] = []
+        carried: list[str] = []
+        skipped = dict.fromkeys(
+            ("partition_skipped_files", "bucket_skipped_files",
+             "key_range_skipped_files"), 0,
         )
-        src = stamped.select(
-            F.col("_hoodie_record_key").alias("k"),
-            (
-                F.array(
-                    *[
-                        F.coalesce(
-                            F.col(c).cast("string"),
-                            F.lit(HIVE_DEFAULT_PARTITION),
-                        )
-                        for c in spec_cols
-                    ]
-                )
-                if spec_cols
-                else F.array().cast("array<string>")
-            ).alias("pps"),
-        ).distinct()
-        cond = (F.col("s.k") >= F.col("r.kmin")) & (
-            F.col("s.k") <= F.col("r.kmax")
-        )
-        if partitioned and spec_cols:
-            # F.get (0-based) returns null out of bounds — never throws,
-            # even under ANSI where element_at(_, 0) would error.
-            cond = (
-                (F.col("r.pi") == F.lit(0))
-                | (
-                    F.get(F.col("s.pps"), F.col("r.pi") - 1)
-                    == F.col("r.pp")
-                )
-            ) & cond
-        hits = {
-            r.f
-            for r in src.alias("s")
-            .join(F.broadcast(ranges_df.alias("r")), cond, "inner")
-            .select("r.f")
-            .distinct()
-            .collect()
-        }
-        hit = unknown + [f for f in ranged if f in hits]
-        skipped = [f for f in ranged if f not in hits]
-        return hit, skipped
+
+        def skip(f: str, tier: str) -> None:
+            carried.append(f)
+            skipped[f"{tier}_skipped_files"] += 1
+
+        for f in prev.files:
+            keys = all_keys
+            idx, pv = self._partition_spec_value_of(f)
+            if idx >= 0 and self.partition_specs[idx] in spec_cols:
+                keys = part_keys.get((self.partition_specs[idx], pv))
+                if keys is None:
+                    skip(f, "partition")
+                    continue
+            if buckets is not None and self._bucket_of(f) not in (
+                None, *buckets
+            ):
+                skip(f, "bucket")
+                continue
+            span = prev.key_ranges.get(f)
+            if not keys or prev.row_counts.get(f) == 0 or (
+                span is not None
+                and bisect.bisect_left(keys, span[0])
+                == bisect.bisect_right(keys, span[1])
+            ):
+                skip(f, "key_range")
+                continue
+            affected.append(f)
+        return affected, carried, skipped
 
     def _probe_bloom_hits(
         self,
@@ -3887,28 +3827,6 @@ class LakehouseTable:
                 except ValueError:
                     return None
         return None
-
-    def _split_bucket_affected(
-        self, files: list[str], stamped: DataFrame
-    ) -> tuple[list[str], list[str]]:
-        """Bucket-index routing tier (Hudi BUCKET index): candidate
-        files are exactly the batch keys' hash buckets. One tiny
-        distinct over the batch's bucket ids (ints — the job's output
-        is <= N rows no matter the batch size); the file-side check is
-        driver-side metadata, no probe scan of table data at all."""
-        if not self.bucket_count:
-            return files, []
-        hit_buckets = {
-            r[0]
-            for r in stamped.select(
-                self._bucket_expr().alias("b")
-            ).distinct().collect()
-        }
-        affected, skipped = [], []
-        for f in files:
-            b = self._bucket_of(f)
-            (affected if b is None or b in hit_buckets else skipped).append(f)
-        return affected, skipped
 
     def _partition_spec_value_of(self, rel_file: str) -> tuple[int, str]:
         """(spec index, partition value) a file's path encodes: ``__pp=``
@@ -4365,53 +4283,6 @@ class LakehouseTable:
 
     def _read_base(self, commit: mf.Commit) -> DataFrame:
         return self._apply_dvs(self._read_parquet(commit.files, commit), commit)
-
-    def _split_affected(
-        self, files: list[str], source: DataFrame
-    ) -> tuple[list[str], list[str]]:
-        """Partition pruning for the CoW rewrite: affected = files in
-        partitions present in the source batch. A GLOBAL index can't
-        partition-prune — the incoming key's previous row may live in
-        any partition — so every file stays a candidate and pruning
-        falls to the key-range probe (Hudi's global-index cost)."""
-        if not self.partition_by or self.global_index:
-            return files, []
-        # After a partition evolution, files written under an OLD spec
-        # prune against the batch's values of THAT spec's column (every
-        # spec column also lives in the data) — one distinct job over
-        # all live spec columns covers every spec at once. Null
-        # partition values land in the hive default-partition dir —
-        # match them under the same token str(None) would never hit.
-        spec_cols = [
-            c
-            for c in dict.fromkeys(s for s in self.partition_specs if s)
-            if c in source.columns
-        ]
-        if not spec_cols:
-            return files, []
-        rows = source.select(
-            *[F.col(c).cast("string").alias(c) for c in spec_cols]
-        ).distinct().collect()
-        values = {
-            c: {
-                HIVE_DEFAULT_PARTITION if r[c] is None else str(r[c])
-                for r in rows
-            }
-            for c in spec_cols
-        }
-        affected, untouched = [], []
-        for f in files:
-            idx, pv = self._partition_spec_value_of(f)
-            col = (
-                self.partition_specs[idx]
-                if 0 <= idx < len(self.partition_specs)
-                else None
-            )
-            if col is None or col not in values or pv in values[col]:
-                affected.append(f)  # unknown spec: conservative hit
-            else:
-                untouched.append(f)
-        return affected, untouched
 
 
 def maintenance_plan(

@@ -555,7 +555,9 @@ def test_savepoint_survives_vacuum_and_restores(spark, tmp_path):
     assert t.savepoints() == {0: "pre-upsert"}
     # releasing the pin exposes v0's files to the next vacuum
     t.delete_savepoint(0)
-    t.upsert(spark.createDataFrame([(9, 90, 9)], "k int, v int, sq int"))
+    # touch an existing key so v0's only file is rewritten (a new key
+    # past the file's key range would be a pure append that keeps it)
+    t.upsert(spark.createDataFrame([(1, 12, 9)], "k int, v int, sq int"))
     t.vacuum(retain_versions=1)
     with _pytest.raises(RuntimeError, match="vacuumed"):
         t.restore(0)

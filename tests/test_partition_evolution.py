@@ -89,8 +89,8 @@ def test_upsert_prunes_old_spec_files_by_their_own_column(
     batch = _rows(
         spark, [(1, "US", "a", 11, 102), (6, "AS", "c", 60, 102)]
     )
-    affected, untouched = t._split_affected(
-        sorted(old_files), batch
+    _affected, untouched, _skipped = t._plan_rewrite(
+        t._commit_for_write(), t._plan_rows(t._stamp_meta(batch, "0"))
     )
     # EU files pruned via their own (old) spec column
     assert all(old_files[f][1] == "EU" for f in untouched)
