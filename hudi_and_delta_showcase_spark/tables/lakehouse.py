@@ -27,8 +27,8 @@ Scale notes (100 TB):
 * Upsert cost is O(files actually holding the batch's keys), not
   O(table), and the file choice costs no Spark job: the batch is
   materialized once, its keys, partition values and bucket ids are
-  collected in one job, and ``_plan_rewrite`` prunes the manifest's
-  file list on the driver — partition, bucket, then each file's
+  collected as Arrow in one job, and ``_plan_rewrite`` prunes the
+  manifest's file list on the driver — partition, bucket, then each file's
   record-key [min, max] from the commit manifest (Hudi's range index
   tier), checked exactly against the sorted batch keys. A batch whose
   keys no live file can hold (inserts past every key range) is a pure
@@ -164,6 +164,20 @@ def _parse_partition_value(v: str, partition_type: str):
     if t == "boolean":
         return v.lower() == "true"
     return v
+
+
+class _SortedKeys:
+    """A sorted Arrow string array that ``bisect`` can search: only the
+    O(log n) keys a search probes become Python strings."""
+
+    def __init__(self, keys) -> None:
+        self._keys = keys
+
+    def __len__(self) -> int:
+        return len(self._keys)
+
+    def __getitem__(self, i: int) -> str:
+        return self._keys[i].as_py()
 
 
 class LakehouseTable:
@@ -3684,11 +3698,11 @@ class LakehouseTable:
         skipped["bloom_skipped_files"] = len(bloom_missed)
         return affected, carried + ri_missed + bloom_missed, skipped
 
-    def _plan_rows(self, stamped: DataFrame) -> list:
-        """The planner's view of a batch, collected in one job: each
-        row's ``_hoodie_record_key``, its value of every live
-        partition-spec column as the string its partition dir encodes,
-        and its bucket id (``__bk``) on bucketed tables."""
+    def _plan_rows(self, stamped: DataFrame):
+        """The planner's view of a batch as an Arrow table, collected in
+        one job: each row's ``_hoodie_record_key``, its value of every
+        live partition-spec column as the string its partition dir
+        encodes, and its bucket id (``__bk``) on bucketed tables."""
         cols = [F.col("_hoodie_record_key")]
         if self.partition_by and not self.global_index:
             cols += [
@@ -3698,15 +3712,17 @@ class LakehouseTable:
             ]
         if self.bucket_count:
             cols.append(self._bucket_expr().alias("__bk"))
-        return stamped.select(*cols).collect()
+        return stamped.select(*cols).toArrow()
 
     def _plan_rewrite(
-        self, prev: mf.Commit, plan_rows: list
+        self, prev: mf.Commit, plan_rows
     ) -> tuple[list[str], list[str], dict[str, int]]:
         """Split ``prev.files`` into (files that can hold a batch key,
         files carried over, skipped counts per tier) on the driver —
-        no Spark job. ``plan_rows`` come from ``_plan_rows``. Tiers, in
-        order; a file a tier knows nothing about stays a candidate:
+        no Spark job. ``plan_rows`` is the Arrow table of
+        ``_plan_rows``; keys stay in Arrow, sorted once per partition.
+        Tiers, in order; a file a tier knows nothing about stays a
+        candidate:
 
         * partition — a file written under spec column ``c`` (its own
           spec, see ``evolve_partitioning``) needs a batch row with its
@@ -3720,21 +3736,38 @@ class LakehouseTable:
           keys; a file whose recorded row count is 0 holds no key, and
           an empty batch has none to hold.
         """
-        fields = plan_rows[0].__fields__ if plan_rows else []
+        import pyarrow.compute as pc
+
         spec_cols = [
-            c for c in fields if c not in ("_hoodie_record_key", "__bk")
+            c for c in plan_rows.column_names
+            if c not in ("_hoodie_record_key", "__bk")
         ]
-        all_keys = sorted(r["_hoodie_record_key"] for r in plan_rows)
-        part_keys: dict[tuple[str, str], list[str]] = {}
-        for r in plan_rows:
-            for c in spec_cols:
-                v = HIVE_DEFAULT_PARTITION if r[c] is None else r[c]
-                part_keys.setdefault((c, v), []).append(
-                    r["_hoodie_record_key"]
+        key_col = plan_rows["_hoodie_record_key"].combine_chunks()
+        all_keys = _SortedKeys(key_col.sort())
+        part_keys: dict[tuple[str, str], _SortedKeys] = {}
+        for c in spec_cols:
+            # sort by (value, key) once: each value's keys are one run
+            order = pc.sort_indices(
+                plan_rows,
+                [(c, "ascending"), ("_hoodie_record_key", "ascending")],
+            )
+            by_value = key_col.take(order)
+            runs = pc.run_end_encode(
+                plan_rows[c].combine_chunks().take(order)
+            )
+            start = 0
+            for v, end in zip(
+                runs.values.to_pylist(), runs.run_ends.to_pylist()
+            ):
+                v = HIVE_DEFAULT_PARTITION if v is None else v
+                part_keys[(c, v)] = _SortedKeys(
+                    by_value.slice(start, end - start)
                 )
-        for ks in part_keys.values():
-            ks.sort()
-        buckets = {r["__bk"] for r in plan_rows} if self.bucket_count else None
+                start = end
+        buckets = (
+            set(plan_rows["__bk"].unique().to_pylist())
+            if self.bucket_count else None
+        )
         affected: list[str] = []
         carried: list[str] = []
         skipped = dict.fromkeys(

@@ -89,12 +89,16 @@ def test_upsert_prunes_old_spec_files_by_their_own_column(
     batch = _rows(
         spark, [(1, "US", "a", 11, 102), (6, "AS", "c", 60, 102)]
     )
-    _affected, untouched, _skipped = t._plan_rewrite(
+    _affected, untouched, skipped = t._plan_rewrite(
         t._commit_for_write(), t._plan_rows(t._stamp_meta(batch, "0"))
     )
-    # EU files pruned via their own (old) spec column
+    # EU files pruned via their own (old) spec column — by the partition
+    # tier itself, not by the key-range tier behind it
     assert all(old_files[f][1] == "EU" for f in untouched)
     assert untouched, "old-spec pruning degraded to scan-everything"
+    assert skipped["partition_skipped_files"] == sum(
+        v == "EU" for _i, v in old_files.values()
+    )
 
     t.upsert(batch)
     got = {

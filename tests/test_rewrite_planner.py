@@ -71,6 +71,21 @@ def test_plan_rewrite_never_drops_a_holding_file(
         pruned += len(carried)
     assert pruned > 0, "the planner pruned nothing"
 
+    # keys of the null region only, inside every old-spec file's key
+    # range: only the partition tier (null -> hive default) can prune
+    batch = [_row(k, 0, 3) for k in (12, 48)]
+    affected, _carried, skipped = t._plan_rewrite(
+        prev, t._plan_rows(t._stamp_meta(_frame(spark, batch), "0"))
+    )
+    assert holders["12"] | holders["48"] <= set(affected)
+    if global_index:
+        assert skipped["partition_skipped_files"] == 0
+    else:
+        assert set(affected) == {
+            f for f in prev.files if "__pp=__HIVE_DEFAULT_PARTITION__" in f
+        }
+        assert skipped["partition_skipped_files"] > 0
+
 
 def test_zero_row_file_is_never_rewritten(spark, tmp_path):
     t = LakehouseTable.create(
