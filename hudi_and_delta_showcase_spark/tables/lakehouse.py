@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import bisect
 import copy
+import dataclasses
 import json
 import os
 import re
@@ -413,13 +414,7 @@ class LakehouseTable:
                 df, table._resolution_cols(), precombine, tiebreakers
             )
         df = table._enforce_constraints(df)
-        stamped = table._stamp_meta(df, commit_time)
-        if bucket_count:
-            # align tasks to buckets: one initial file per bucket
-            # instead of tasks x buckets (see optimize's bucket note)
-            stamped = stamped.withColumn(
-                "__bko", table._bucket_expr()
-            ).repartition(int(bucket_count), F.col("__bko")).drop("__bko")
+        stamped = table._bucket_align(table._stamp_meta(df, commit_time))
         files = table._write_files(stamped, f"c{0:05d}")
         # record the physical read schema in the commit (Delta's
         # metaData action): upserts reconcile types against THIS instead
@@ -442,7 +437,6 @@ class LakehouseTable:
                 action="insert",
                 commit_time=commit_time,
                 files=files,
-                log_files=[],
                 # Delta CDF's add-only rule (r7): a blind insert writes
                 # NO change sidecar — read_changes synthesizes the
                 # insert images from the commit's own data files, so a
@@ -451,7 +445,6 @@ class LakehouseTable:
                 stats={"written_files": len(files),
                        **({"cdc_add_only": True} if cdc_enabled else {}),
                        **(extra_stats or {})},
-                cdc_files=[],
                 ri_files=table._write_record_index(files, 0),
                 table_schema=schema_json,
                 **table._index_fields(files),
@@ -619,7 +612,6 @@ class LakehouseTable:
                 action="convert",
                 commit_time=mf.make_commit_time(),
                 files=files,
-                log_files=[],
                 stats={"converted_files": len(files)},
                 **index,
             ),
@@ -1000,7 +992,7 @@ class LakehouseTable:
         # table_schema (physical names) so every engine read declares
         # the widened schema and Spark's parquet reader upcasts, the
         # same mechanism the engine's own widen_column uses.
-        widened_schema: str | None = None
+        widened_schema = ""
         if any(
             (f.get("metadata") or {}).get("delta.typeChanges")
             for f in json.loads(meta_d["schemaString"])["fields"]
@@ -1015,7 +1007,6 @@ class LakehouseTable:
                 action="convert",
                 commit_time=mf.make_commit_time(),
                 files=sorted(files),
-                log_files=[],
                 table_schema=widened_schema,
                 stats={
                     "converted_files": len(files),
@@ -1137,7 +1128,6 @@ class LakehouseTable:
                 action="convert",
                 commit_time=mf.make_commit_time(),
                 files=files,
-                log_files=[],
                 stats={
                     "converted_files": len(files),
                     "source_format": "iceberg",
@@ -1541,26 +1531,14 @@ class LakehouseTable:
             mapping.pop(phys, None)
         else:
             mapping[phys] = new
-        commit = mf.Commit(
-            version=prev.version + 1,
-            action="rename",
-            commit_time=mf.make_commit_time(),
-            files=list(prev.files),
-            log_files=list(prev.log_files),
-            stats={"renamed_from": old, "renamed_to": new},
-            key_ranges=dict(prev.key_ranges),
-            col_stats=dict(prev.col_stats),
-            row_counts=dict(prev.row_counts),
-            key_blooms=dict(prev.key_blooms),
-            column_blooms=dict(prev.column_blooms),
-            dv_files=list(prev.dv_files),
-            txn=dict(prev.txn),
-            ri_files=list(prev.ri_files),
-            table_schema=prev.table_schema,
-            column_mapping=mapping,
+        return self._publish(
+            mf.next_commit(
+                prev,
+                "rename",
+                {"renamed_from": old, "renamed_to": new},
+                column_mapping=mapping,
+            )
         )
-        commit = self._publish(commit)
-        return commit
 
     def drop_column(self, name: str) -> mf.Commit:
         """Delta ``ALTER TABLE ... DROP COLUMN`` under column mapping:
@@ -1624,25 +1602,15 @@ class LakehouseTable:
         )
         mapping = dict(prev.column_mapping)
         mapping[phys] = f"__dropped_v{prev.version + 1}"
-        commit = mf.Commit(
-            version=prev.version + 1,
-            action="drop_column",
-            commit_time=mf.make_commit_time(),
-            files=list(prev.files),
-            log_files=list(prev.log_files),
-            stats={"dropped_column": name, "physical_name": phys},
-            key_ranges=dict(prev.key_ranges),
-            col_stats=dict(prev.col_stats),
-            row_counts=dict(prev.row_counts),
-            key_blooms=dict(prev.key_blooms),
-            column_blooms=dict(prev.column_blooms),
-            dv_files=list(prev.dv_files),
-            txn=dict(prev.txn),
-            ri_files=list(prev.ri_files),
-            table_schema=json.dumps(new_schema.jsonValue()),
-            column_mapping=mapping,
+        return self._publish(
+            mf.next_commit(
+                prev,
+                "drop_column",
+                {"dropped_column": name, "physical_name": phys},
+                table_schema=json.dumps(new_schema.jsonValue()),
+                column_mapping=mapping,
+            )
         )
-        return self._publish(commit)
 
     # ------------------------------------------------------------------ #
     # table-property evolution (Delta ALTER TABLE ... SET TBLPROPERTIES /
@@ -1929,28 +1897,19 @@ class LakehouseTable:
                 mor_cdc = self._classify_upsert_cdc(
                     pre_source, stamped, version, commit_time
                 )
-            commit = mf.Commit(
-                version=version,
-                action="upsert",
-                commit_time=commit_time,
-                files=prev.files,
-                log_files=prev.log_files + new_logs,
-                cdc_files=mor_cdc,
-                stats={"log_files_added": len(new_logs),
-                       **(extra_stats or {})},
-                key_ranges=prev.key_ranges,
-                col_stats=prev.col_stats,
-                row_counts=prev.row_counts,
-                key_blooms=prev.key_blooms,
-                column_blooms=prev.column_blooms,
-                dv_files=list(prev.dv_files),
-                txn=new_txn,
-                ri_files=list(prev.ri_files),
-                table_schema=table_schema,
-                column_mapping=dict(prev.column_mapping),
+            return self._publish(
+                mf.next_commit(
+                    prev,
+                    "upsert",
+                    {"log_files_added": len(new_logs),
+                     **(extra_stats or {})},
+                    commit_time=commit_time,
+                    log_files=prev.log_files + new_logs,
+                    cdc_files=mor_cdc,
+                    txn=new_txn,
+                    table_schema=table_schema,
+                )
             )
-            commit = self._publish(commit)
-            return commit
 
         # ---- CoW: rewrite only the files that can hold a batch key ----
         # The batch feeds the plan, the merge, the write and (CDC) the
@@ -2033,23 +1992,15 @@ class LakehouseTable:
             # commit's new data files ARE the change set — Delta CDF's
             # add-only rule, read_changes synthesizes (r7)
             add_only_cdc = self.cdc_enabled
-        if self.bucket_count:
-            # keep ONE new file per touched bucket: align write tasks
-            # to buckets (an unaligned shuffle output would cross every
-            # task with every bucket dir)
-            merged = merged.withColumn(
-                "__bko", self._bucket_expr()
-            ).repartition(
-                int(self.bucket_count), F.col("__bko")
-            ).drop("__bko")
-        new_files = self._write_files(merged, f"c{version:05d}")
-        commit = mf.Commit(
-            version=version,
-            action="upsert",
-            commit_time=commit_time,
-            files=untouched + new_files,
-            log_files=[],
-            stats={
+        new_files = self._write_files(
+            self._bucket_align(merged), f"c{version:05d}"
+        )
+        return self._commit_rewrite(
+            prev,
+            "upsert",
+            new_files,
+            untouched,
+            {
                 "rewritten_files": len(affected),
                 "carried_over_files": len(untouched),
                 **skipped,
@@ -2057,20 +2008,11 @@ class LakehouseTable:
                 **({"cdc_add_only": True} if add_only_cdc else {}),
                 **(extra_stats or {}),
             },
-            ri_files=prev.ri_files
-            + self._write_record_index(new_files, version),
-            # DV entries for untouched files stay live; entries naming
-            # rewritten files are inert (the file left the live set)
-            dv_files=list(prev.dv_files),
+            commit_time=commit_time,
             txn=new_txn,
             cdc_files=cdc_added,
             table_schema=table_schema,
-            column_mapping=dict(prev.column_mapping),
-            **self._index_fields(new_files, carry_from=prev,
-                                 carried=untouched),
         )
-        commit = self._publish(commit)
-        return commit
 
     def upsert_quarantine(
         self, source: DataFrame
@@ -2226,32 +2168,21 @@ class LakehouseTable:
                         version,
                         commit_time,
                     )
-            commit = mf.Commit(
-                version=version,
-                action="delete",
-                commit_time=commit_time,
-                files=prev.files,
-                log_files=[],
-                stats={
-                    "rewritten_files": 0,
-                    "dv_candidate_files": len(affected),
-                    "dv_files_added": len(dv_added),
-                    **skipped,
-                },
-                key_ranges=prev.key_ranges,
-                col_stats=prev.col_stats,
-                row_counts=prev.row_counts,
-                key_blooms=prev.key_blooms,
-                column_blooms=prev.column_blooms,
-                dv_files=prev.dv_files + dv_added,
-                txn=dict(prev.txn),
-                cdc_files=cdc_added,
-                ri_files=list(prev.ri_files),
-                table_schema=prev.table_schema,
-                column_mapping=dict(prev.column_mapping),
+            return self._publish(
+                mf.next_commit(
+                    prev,
+                    "delete",
+                    {
+                        "rewritten_files": 0,
+                        "dv_candidate_files": len(affected),
+                        "dv_files_added": len(dv_added),
+                        **skipped,
+                    },
+                    commit_time=commit_time,
+                    dv_files=prev.dv_files + dv_added,
+                    cdc_files=cdc_added,
+                )
             )
-            commit = self._publish(commit)
-            return commit
 
         new_files: list[str] = []
         cdc_added = []
@@ -2271,28 +2202,15 @@ class LakehouseTable:
                     version,
                     commit_time,
                 )
-        commit = mf.Commit(
-            version=version,
-            action="delete",
+        return self._commit_rewrite(
+            prev,
+            "delete",
+            new_files,
+            untouched,
+            {"rewritten_files": len(affected), **skipped},
             commit_time=commit_time,
-            files=untouched + new_files,
-            log_files=[],
-            stats={
-                "rewritten_files": len(affected),
-                **skipped,
-            },
-            dv_files=list(prev.dv_files),
-            txn=dict(prev.txn),
             cdc_files=cdc_added,
-            ri_files=prev.ri_files
-            + self._write_record_index(new_files, version),
-            table_schema=prev.table_schema,
-            column_mapping=dict(prev.column_mapping),
-            **self._index_fields(new_files, carry_from=prev,
-                                 carried=untouched),
         )
-        commit = self._publish(commit)
-        return commit
 
     def _optimize_partition(
         self,
@@ -2353,46 +2271,23 @@ class LakehouseTable:
             ).sortWithinPartitions(*cluster_by)
         else:
             df = df.coalesce(n)
-        if self.bucket_count:
-            # mirror optimize()'s bucket branch: align tasks to buckets
-            # so _write_files' partitionBy(__bk) emits ONE file per
-            # bucket — a range/hash-repartitioned df would cross every
-            # task with every bucket dir (tasks x buckets files),
-            # defeating target_files. Cluster/z-order intent degrades
-            # gracefully to sort-within-bucket.
-            sort_cols = (cluster_by or []) + (zorder_by or [])
-            df = df.withColumn("__bko", self._bucket_expr()).repartition(
-                min(n, int(self.bucket_count)), F.col("__bko")
-            )
-            if sort_cols:
-                df = df.sortWithinPartitions("__bko", *sort_cols)
-            df = df.drop("__bko")
-        version = prev.version + 1
-        new_files = self._write_files(df, f"c{version:05d}")
-        commit = mf.Commit(
-            version=version,
-            action="optimize",
-            commit_time=mf.make_commit_time(),
-            files=carried + new_files,
-            log_files=[],
-            stats={
+        df = self._bucket_align(
+            df, n, (cluster_by or []) + (zorder_by or [])
+        )
+        new_files = self._write_files(df, f"c{prev.version + 1:05d}")
+        return self._commit_rewrite(
+            prev,
+            "optimize",
+            new_files,
+            carried,
+            {
                 "optimize_where": f"{self.partition_by}={value}",
                 "before_files": len(prev.files),
                 "rewritten_files": len(scoped),
                 "carried_over_files": len(carried),
                 "after_files": len(new_files),
             },
-            dv_files=list(prev.dv_files),
-            txn=dict(prev.txn),
-            ri_files=prev.ri_files
-            + self._write_record_index(new_files, version),
-            table_schema=prev.table_schema,
-            column_mapping=dict(prev.column_mapping),
-            **self._index_fields(
-                new_files, carry_from=prev, carried=carried
-            ),
         )
-        return self._publish(commit)
 
     def compact(self) -> mf.Commit:
         """MoR compaction: fold log files into a fresh base (the async
@@ -2403,29 +2298,20 @@ class LakehouseTable:
         if not prev.log_files:
             return prev
         rt = self._read_rt_physical()  # files keep PHYSICAL names
-        version = prev.version + 1
         commit_time = mf.make_commit_time()
-        if self.bucket_count:
-            # one output file per bucket (see optimize's bucket note)
-            rt = rt.withColumn("__bko", self._bucket_expr()).repartition(
-                int(self.bucket_count), F.col("__bko")
-            ).drop("__bko")
-        files = self._write_files(rt, f"c{version:05d}")
-        commit = mf.Commit(
-            version=version,
-            action="compact",
-            commit_time=commit_time,
-            files=files,
-            log_files=[],
-            stats={"compacted_log_files": len(prev.log_files)},
-            txn=dict(prev.txn),
-            ri_files=self._write_record_index(files, version),
-            table_schema=prev.table_schema,
-            column_mapping=dict(prev.column_mapping),
-            **self._index_fields(files),
+        files = self._write_files(
+            self._bucket_align(rt), f"c{prev.version + 1:05d}"
         )
-        commit = self._publish(commit)
-        return commit
+        return self._commit_rewrite(
+            prev,
+            "compact",
+            files,
+            [],
+            {"compacted_log_files": len(prev.log_files)},
+            commit_time=commit_time,
+            log_files=[],
+            dv_files=[],
+        )
 
     # ------------------------------------------------------------------ #
     # maintenance (D7 / D8)
@@ -2522,19 +2408,9 @@ class LakehouseTable:
             df = df.repartition(n, F.col(self.partition_by))
         else:
             df = df.coalesce(n)
-        if self.bucket_count:
-            # bucket-index tables: align tasks to buckets so the write's
-            # partitionBy(__bk) emits ONE file per bucket (a range- or
-            # hash-repartitioned df would cross every task with every
-            # bucket dir -> tasks x buckets files). Cluster/z-order
-            # intent degrades gracefully to sort-within-bucket.
-            sort_cols = (cluster_by or []) + (zorder_by or [])
-            df = df.withColumn("__bko", self._bucket_expr()).repartition(
-                min(n, int(self.bucket_count)), F.col("__bko")
-            )
-            if sort_cols:
-                df = df.sortWithinPartitions("__bko", *sort_cols)
-            df = df.drop("__bko")
+        df = self._bucket_align(
+            df, n, (cluster_by or []) + (zorder_by or [])
+        )
         files = self._write_files(df, f"c{version:05d}")
         stats: dict = {"before_files": len(prev.files), "after_files": len(files)}
         if cluster_by:
@@ -2549,21 +2425,10 @@ class LakehouseTable:
             stats["zorder_spec"] = ",".join(zorder_by)
             stats["clustered_output"] = files
             stats["zorder_bounds"] = zbounds
-        commit = mf.Commit(
-            version=version,
-            action="optimize",
-            commit_time=commit_time,
-            files=files,
-            log_files=[],
-            stats=stats,
-            txn=dict(prev.txn),
-            ri_files=self._write_record_index(files, version),
-            table_schema=prev.table_schema,
-            column_mapping=dict(prev.column_mapping),
-            **self._index_fields(files),
+        return self._commit_rewrite(
+            prev, "optimize", files, [], stats,
+            commit_time=commit_time, log_files=[], dv_files=[],
         )
-        commit = self._publish(commit)
-        return commit
 
     def reorg_purge(self, min_deleted_ratio: float = 0.05):
         """Delta ``REORG TABLE ... APPLY (PURGE)``: materialize
@@ -2624,30 +2489,20 @@ class LakehouseTable:
         new_dvs: list[str] = []
         if any(f in per_file for f in untouched):
             new_dvs = self._write_dv_files(surviving, f"c{version:05d}")
-        commit = mf.Commit(
-            version=version,
-            action="purge",
-            commit_time=commit_time,
-            files=untouched + new_files,
-            log_files=prev.log_files,
-            stats={
+        return self._commit_rewrite(
+            prev,
+            "purge",
+            new_files,
+            untouched,
+            {
                 "purged_files": len(victims),
                 "carried_over_files": len(untouched),
                 "written_files": len(new_files),
-                "purged_dv_rows": sum(
-                    per_file[f] for f in victims
-                ),
+                "purged_dv_rows": sum(per_file[f] for f in victims),
             },
+            commit_time=commit_time,
             dv_files=new_dvs,
-            txn=dict(prev.txn),
-            ri_files=prev.ri_files
-            + self._write_record_index(new_files, version),
-            table_schema=prev.table_schema,
-            column_mapping=dict(prev.column_mapping),
-            **self._index_fields(new_files, carry_from=prev,
-                                 carried=untouched),
         )
-        return self._publish(commit)
 
     def _optimize_incremental(
         self,
@@ -2727,24 +2582,10 @@ class LakehouseTable:
         }
         if zorder_by:
             stats["zorder_bounds"] = zbounds
-        commit = mf.Commit(
-            version=version,
-            action="optimize",
+        return self._commit_rewrite(
+            prev, "optimize", new_files, carried, stats,
             commit_time=commit_time,
-            files=carried + new_files,
-            log_files=[],
-            stats=stats,
-            # DVs on carried files stay live; entries naming restacked
-            # files just became inert (their file left the live set)
-            dv_files=list(prev.dv_files),
-            txn=dict(prev.txn),
-            ri_files=prev.ri_files
-            + self._write_record_index(new_files, version),
-            table_schema=prev.table_schema,
-            column_mapping=dict(prev.column_mapping),
-            **self._index_fields(new_files, carry_from=prev, carried=carried),
         )
-        return self._publish(commit)
 
     _Z_BITS = 4  # quantile buckets per dimension = 2**_Z_BITS
 
@@ -2961,34 +2802,19 @@ class LakehouseTable:
         dead["cdc_files"] = dead_cdc
         if dry_run or n_dead == 0:
             return {"missing": dead, "repaired": False}
-        gone = set(dead["files"])
-        commit = mf.Commit(
-            version=prev.version + 1,
-            action="fsck",
-            commit_time=mf.make_commit_time(),
-            files=[f for f in prev.files if f not in gone],
-            log_files=[
-                f for f in prev.log_files if f not in set(dead["log_files"])
-            ],
-            stats={"fsck_removed": n_dead, **{k: v for k, v in dead.items() if v}},
-            key_ranges={k: v for k, v in prev.key_ranges.items() if k not in gone},
-            col_stats={k: v for k, v in prev.col_stats.items() if k not in gone},
-            row_counts={k: v for k, v in prev.row_counts.items() if k not in gone},
-            key_blooms={k: v for k, v in prev.key_blooms.items() if k not in gone},
-            column_blooms={
-                k: v for k, v in prev.column_blooms.items() if k not in gone
-            },
-            dv_files=[
-                f for f in prev.dv_files if f not in set(dead["dv_files"])
-            ],
-            txn=dict(prev.txn),
-            ri_files=[
-                f for f in prev.ri_files if f not in set(dead["ri_files"])
-            ],
-            table_schema=prev.table_schema,
-            column_mapping=dict(prev.column_mapping),
+        surviving = {
+            name: [f for f in getattr(prev, name) if f not in set(dead[name])]
+            for name in ("files", "log_files", "dv_files", "ri_files")
+        }
+        self._publish(
+            mf.next_commit(
+                prev,
+                "fsck",
+                {"fsck_removed": n_dead,
+                 **{k: v for k, v in dead.items() if v}},
+                **surviving,
+            )
         )
-        self._publish(commit)
         return {"missing": dead, "repaired": True}
 
     def restore(self, version: int) -> mf.Commit:
@@ -3014,30 +2840,14 @@ class LakehouseTable:
                 f"e.g. {missing[0]}"
             )
         prev = self._commit(None)
-        commit = mf.Commit(
-            version=prev.version + 1,
-            action="restore",
-            commit_time=mf.make_commit_time(),
-            files=list(target.files),
-            log_files=list(target.log_files),
-            stats={"restored_version": version},
-            key_ranges=dict(target.key_ranges),
-            col_stats=dict(target.col_stats),
-            row_counts=dict(target.row_counts),
-            key_blooms=dict(target.key_blooms),
-            column_blooms=dict(target.column_blooms),
-            dv_files=list(target.dv_files),
-            # writer watermarks never rewind: carry the LATEST txn map,
-            # not the restore target's (stream progress is not data)
-            txn=dict(prev.txn),
-            ri_files=list(target.ri_files),
-            table_schema=target.table_schema,
-            # schema follows the restored version (Delta RESTORE
-            # restores data AND schema): take the TARGET's mapping
-            column_mapping=dict(target.column_mapping),
+        # the target's state (files, indexes, and schema plus column
+        # mapping: Delta RESTORE restores data AND schema), but writer
+        # watermarks never rewind: carry the LATEST txn map (stream
+        # progress is not data)
+        base = dataclasses.replace(target, version=prev.version, txn=prev.txn)
+        return self._publish(
+            mf.next_commit(base, "restore", {"restored_version": version})
         )
-        commit = self._publish(commit)
-        return commit
 
     # ------------------------------------------------------------------ #
     # internals
@@ -3096,6 +2906,58 @@ class LakehouseTable:
             raise
         self._latest_commit = copy.deepcopy(final)
         return final
+
+    def _commit_rewrite(
+        self,
+        prev: mf.Commit,
+        action: str,
+        new_files: list[str],
+        carried: list[str],
+        stats: dict,
+        **changes,
+    ) -> mf.Commit:
+        """Publish a commit that replaces some of ``prev``'s files with
+        ``new_files`` and keeps ``carried``: index entries for the new
+        files, a record-index sidecar for them, and the rest through
+        ``mf.next_commit``. Record-index sidecars carry over only with a
+        carried file: when nothing is carried every old entry names a
+        dead file, so the list restarts. Deletion vectors carry over
+        unless the caller passes ``dv_files``: entries naming rewritten
+        files are inert, but the exporters replay the DV history, so
+        only compact, full optimize and purge, which materialize
+        vectors, pass a new list."""
+        ri = self._write_record_index(new_files, prev.version + 1)
+        index = self._index_fields(new_files)
+        return self._publish(
+            mf.next_commit(
+                prev,
+                action,
+                stats,
+                files=carried + new_files,
+                ri_files=(prev.ri_files if carried else []) + ri,
+                **{k: {**getattr(prev, k), **v} for k, v in index.items()},
+                **changes,
+            )
+        )
+
+    def _bucket_align(
+        self, df: DataFrame, n: int | None = None, sort_cols=()
+    ) -> DataFrame:
+        """On bucket-index tables, align write tasks to buckets (at most
+        ``n`` tasks) so ``_write_files``' ``partitionBy(__bk)`` emits ONE
+        file per bucket: a range- or hash-repartitioned df would cross
+        every task with every bucket dir (tasks x buckets files).
+        Cluster/z-order intent (``sort_cols``) degrades to
+        sort-within-bucket. Other tables pass through unchanged."""
+        if not self.bucket_count:
+            return df
+        buckets = int(self.bucket_count)
+        df = df.withColumn("__bko", self._bucket_expr()).repartition(
+            buckets if n is None else min(n, buckets), F.col("__bko")
+        )
+        if sort_cols:
+            df = df.sortWithinPartitions("__bko", *sort_cols)
+        return df.drop("__bko")
 
     def _stamp_meta(self, df: DataFrame, commit_time: str) -> DataFrame:
         """§1.5: Hudi's meta columns as ordinary derived columns."""
@@ -3162,17 +3024,12 @@ class LakehouseTable:
             for p in fsio.walk_files(out, ".parquet")
         )
 
-    def _index_fields(
-        self,
-        new_files: list[str],
-        carry_from: mf.Commit | None = None,
-        carried: list[str] | None = None,
-    ) -> dict:
-        """Build the commit's file-skipping index fields: footer stats
-        for the NEW files (one pass each) merged with carried-over
-        entries from the previous commit for untouched files; plus, on
-        ``bloom_index`` tables, an 8 KiB key bloom per new file (one
-        extra scan of just-written data)."""
+    def _index_fields(self, new_files: list[str]) -> dict:
+        """The file-skipping index entries of ``new_files`` only, one
+        dict per ``mf._INDEX_FIELDS`` name: footer stats (one pass
+        each) plus, on ``bloom_index`` / ``bloom_columns`` tables, the
+        blooms (one extra scan of just-written data). Carried files
+        keep their entries through ``mf.next_commit``."""
         row_counts: dict[str, int] = {}
         stats = self._file_column_stats(new_files, counts_out=row_counts)
         key_ranges = {
@@ -3230,18 +3087,6 @@ class LakehouseTable:
                     rel = os.path.relpath(local, root_path)
                     if rel in wanted:
                         column_blooms.setdefault(rel, {})[col] = [t_str, b64]
-        if carry_from is not None:
-            for f in carried or []:
-                if f in carry_from.key_ranges:
-                    key_ranges[f] = carry_from.key_ranges[f]
-                if f in carry_from.col_stats:
-                    col_stats[f] = carry_from.col_stats[f]
-                if f in carry_from.row_counts:
-                    row_counts[f] = carry_from.row_counts[f]
-                if f in carry_from.key_blooms:
-                    key_blooms[f] = carry_from.key_blooms[f]
-                if f in carry_from.column_blooms:
-                    column_blooms[f] = carry_from.column_blooms[f]
         return {
             "key_ranges": key_ranges,
             "col_stats": col_stats,
@@ -3418,7 +3263,7 @@ class LakehouseTable:
         against ALL logs (log rows are never stats-pruned), CoW applies
         live DVs; an empty keep set serves a schema-stable empty scan."""
         if self.table_type == MERGE_ON_READ and commit.log_files:
-            pruned = mf.Commit(**{**commit.__dict__, "files": keep})
+            pruned = dataclasses.replace(commit, files=keep)
             base = self._read_base(pruned)
             log = self._read_parquet(commit.log_files, commit)
             df = base.unionByName(log, allowMissingColumns=True)
@@ -3620,7 +3465,7 @@ class LakehouseTable:
         ``(_hoodie_record_key, file)`` rows — O(new rows) per commit,
         the same opt-in economics as the bloom tier. Entries for files
         that later die are filtered against the live set at probe time;
-        full-rewrite commits reset the sidecar list."""
+        commits that carry no file over reset the sidecar list."""
         if not self.record_index or not new_files:
             return []
         scan = self.spark.read.parquet(

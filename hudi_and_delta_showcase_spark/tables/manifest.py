@@ -22,6 +22,14 @@ and get full ``Commit`` snapshots back from ``read_commit`` — the
 delta encoding is invisible above this module. Pre-checkpointing
 tables (full snapshot per commit) read back transparently.
 
+Derivation: every commit after version 0 is built by ``next_commit``
+from its parent, so this module alone decides which fields are
+cumulative state (carried over unless a writer changes them) and which
+are per-commit (``stats``, ``cdc_files``, ``commit_time``). The
+per-file index entries (``_INDEX_FIELDS``) are restricted to the
+commit's live ``files``: an entry naming a rewritten or vanished file
+never outlives it.
+
 Scale: at 100 TB / millions of files the old full-list-per-commit
 design made every commit O(table); here steady-state commit IO is
 O(delta) + one O(table-files) checkpoint per ``CHECKPOINT_INTERVAL``
@@ -51,6 +59,7 @@ on GCS (/root/reference/README.md:1170-1181).
 from __future__ import annotations
 
 import copy
+import dataclasses
 import json
 import time
 import uuid
@@ -121,8 +130,9 @@ class Commit:
     #: in the metadata table): rows ``(_hoodie_record_key, file)`` for
     #: every base file written since the last full rewrite, cumulative.
     #: Entries naming dead files are filtered against the live-file set
-    #: at resolution time; full-rewrite commits (compact, full optimize)
-    #: reset the list to their own output's index. Only present on
+    #: at resolution time; rewrites that carry no file over (compact,
+    #: full optimize, any rewrite of every live file) reset the list to
+    #: their own output's index. Only present on
     #: tables created with ``record_index=True``.
     ri_files: list[str] = field(default_factory=list)
     #: the table's current PHYSICAL read schema as StructType JSON —
@@ -172,16 +182,34 @@ CHECKPOINT_INTERVAL = 10
 #: ``cdc_files`` is NOT here: it is per-commit (this commit's change
 #: files), not cumulative state, so deltas carry it verbatim.
 _LIST_FIELDS = ("files", "log_files", "dv_files", "ri_files")
-#: dict-valued Commit fields delta-encoded as <name>_set / <name>_unset.
-_DICT_FIELDS = (
+#: per-file index dicts, keyed by a live base file of ``files``.
+_INDEX_FIELDS = (
     "key_ranges",
     "col_stats",
     "row_counts",
     "key_blooms",
     "column_blooms",
-    "txn",
-    "column_mapping",
 )
+#: dict-valued Commit fields delta-encoded as <name>_set / <name>_unset.
+_DICT_FIELDS = (*_INDEX_FIELDS, "txn", "column_mapping")
+
+
+def next_commit(prev: Commit, action: str, stats: dict, **changes) -> Commit:
+    """The commit following ``prev``: every field carries over from
+    ``prev`` unless given in ``changes``, except the per-commit ones
+    (``commit_time`` defaults to now, ``cdc_files`` to none). The
+    per-file index entries are then restricted to the new ``files``."""
+    if "commit_time" not in changes:
+        changes["commit_time"] = make_commit_time()
+    changes.setdefault("cdc_files", [])
+    commit = dataclasses.replace(
+        prev, version=prev.version + 1, action=action, stats=stats, **changes
+    )
+    live = set(commit.files)
+    for name in _INDEX_FIELDS:
+        index = getattr(commit, name)
+        setattr(commit, name, {f: v for f, v in index.items() if f in live})
+    return commit
 
 
 def list_versions(table_path: str) -> list[int]:

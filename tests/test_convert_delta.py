@@ -54,6 +54,22 @@ def test_convert_adopts_live_snapshot_not_orphans(spark, tmp_path):
     assert 1 not in {r.k for r in t.read().collect()}
 
 
+def test_convert_records_an_empty_schema_not_none(spark, tmp_path):
+    """A non-widened table converts with ``table_schema == ""``, so its
+    first upsert records no schema change: a spurious ``None -> ""``
+    change would make two concurrent first writes conflict as
+    "concurrent schema changes" instead of being checked on files."""
+    root = str(tmp_path / "dl")
+    write_delta_table(
+        spark.createDataFrame([(1, "a", 0)], "k int, v string, g int"), root
+    )
+    t = LakehouseTable.convert_delta(spark, root, key_cols=["k"])
+    assert t._commit(0).table_schema == ""
+    t.upsert(spark.createDataFrame([(2, "b", 0)], "k int, v string, g int"))
+    with open(os.path.join(root, "_commits", "00000001.json")) as fh:
+        assert json.load(fh)["table_schema_set"] is None
+
+
 def _foreign_partitioned_delta(spark, root: str) -> None:
     """A partitioned _delta_log the way delta-spark lays it out:
     col=value dirs, partition column ABSENT from the data files."""
