@@ -167,6 +167,19 @@ def _parse_partition_value(v: str, partition_type: str):
     return v
 
 
+def _record_key_of(key) -> str:
+    """The record key the writer stamps for a lookup key (a scalar or a
+    tuple of key-column values): ``concat_ws("|", cast(part as
+    string))`` skips null parts and prints booleans as ``true`` /
+    ``false``. A record-key string passes through unchanged."""
+    parts = key if isinstance(key, (tuple, list)) else (key,)
+    return "|".join(
+        str(v).lower() if isinstance(v, bool) else str(v)
+        for v in parts
+        if v is not None
+    )
+
+
 class _SortedKeys:
     """A sorted Arrow string array that ``bisect`` can search: only the
     O(log n) keys a search probes become Python strings."""
@@ -1258,9 +1271,8 @@ class LakehouseTable:
     def _read_physical(self, version: int | None = None) -> DataFrame:
         """Snapshot under PHYSICAL (on-disk) column names — the shape
         every internal write/maintenance path works in."""
-        if self.table_type == MERGE_ON_READ:
-            return self._read_rt_physical(version)
-        return self._read_base(self._commit(version))
+        commit = self._commit(version)
+        return self._serve_pruned(commit, commit.files)
 
     def read_ro(self, version: int | None = None) -> DataFrame:
         """S5 read-optimized: base files only — serves stale values between
@@ -1288,120 +1300,38 @@ class LakehouseTable:
         row survives, identically in CoW (partition-scoped rewrite) and
         MoR `_rt` (per-partition window)."""
         commit = self._commit(version)
-        return self._logical(self._read_rt_physical(version), commit)
-
-    def _read_rt_physical(self, version: int | None = None) -> DataFrame:
-        commit = self._commit(version)
-        base = self._read_base(commit)
-        if not commit.log_files:
-            return base
-        log = self._read_parquet(commit.log_files, commit)
-        union = base.unionByName(log, allowMissingColumns=True)
-        order = [F.desc("_hoodie_commit_time")]
-        if self.precombine:
-            order.append(F.desc(self.precombine))
-        order += [F.desc(t) for t in self.tiebreakers]
-        w = Window.partitionBy(*self._resolution_cols()).orderBy(*order)
-        return (
-            union.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        return self._logical(self._read_physical(version), commit)
 
     def read_for_keys(
         self, keys: list, version: int | None = None
     ) -> DataFrame:
-        """Point-lookup read path: scan ONLY the files whose record-key
-        range can contain one of ``keys`` (driver-side metadata check
-        against the manifest's per-file key ranges — no Spark job for
-        the pruning itself), then filter exactly. After
-        ``optimize(cluster_by=...)`` ranges are disjoint, so a k-key
-        lookup reads O(k) files out of millions — Hudi's record-index
-        read path expressed on the manifest. Files with unknown ranges
-        are scanned conservatively. MoR with outstanding logs resolves
-        through the `_rt` merge first (logs are unindexed until
-        compaction, as in Hudi), then filters."""
-        commit = self._commit(version)
-        rks = {
-            "|".join("" if v is None else str(v) for v in k)
-            if isinstance(k, (tuple, list))
-            else ("" if k is None else str(k))
-            for k in keys
-        }
-        if self.table_type == MERGE_ON_READ and commit.log_files:
-            return self.read_rt(version).filter(
-                F.col("_hoodie_record_key").isin(*sorted(rks))
-            )
-        if self.record_index and commit.ri_files:
-            # record-index tier: the index names the files holding the
-            # keys EXACTLY — a k-key lookup reads O(k) files out of
-            # millions even on unclustered tables where every range
-            # overlaps (the shape the range tier below cannot prune)
-            live = set(commit.files)
-            hit = {
-                r.file
-                for r in self._ri_scan(commit)
-                .filter(F.col("_hoodie_record_key").isin(*sorted(rks)))
-                .select("file")
-                .distinct()
-                .collect()
-            }
-            candidates = sorted(hit & live)
-        else:
-            candidates = []
-            for f in commit.files:
-                rng = commit.key_ranges.get(f)
-                if rng is None or any(rng[0] <= rk <= rng[1] for rk in rks):
-                    candidates.append(f)
-        if self.bucket_count and len(candidates) > 1:
-            # bucket-index routing: the keys' hash buckets name the
-            # candidate files arithmetically (one tiny 1-task job to
-            # evaluate the engine hash on k keys — exact, no false
-            # positives beyond hash collisions within a bucket)
-            kdf = self.spark.createDataFrame(
-                self.spark.sparkContext.parallelize(
-                    [(k,) for k in sorted(rks)], 1
-                ),
-                "_hoodie_record_key string",
-            )
-            key_buckets = {
-                r[0]
-                for r in kdf.select(
-                    self._bucket_expr().alias("b")
-                ).distinct().collect()
-            }
-            candidates = [
-                f
-                for f in candidates
-                if (b := self._bucket_of(f)) is None or b in key_buckets
-            ]
-        # bloom tier for point lookups: on unclustered tables the ranges
-        # above keep nearly every file; the per-file blooms cut the scan
-        # to the files that can actually hold one of the keys
-        if self.bloom_index and len(candidates) > 1:
-            blooms = {
-                f: commit.key_blooms[f]
-                for f in candidates
-                if f in commit.key_blooms
-            }
-            if blooms:
-                from hudi_and_delta_showcase_spark.tables.bloom import (
-                    probe_blooms,
-                )
+        """Point-lookup read path: ``keys`` are key-column values (a
+        tuple per composite key) or record-key strings. The files to
+        scan are picked by the writers' planner (``_rewrite_candidates``
+        over the keys as a batch with no partition values): the key-range
+        and bucket tiers on the driver, then the record-index and bloom
+        probes where the table keeps them. A k-key lookup on a clustered
+        or indexed table reads O(k) files; files with unknown ranges are
+        scanned conservatively. On MoR the base files are pruned the
+        same way and merged with every outstanding log (logs are
+        unindexed until compaction, as in Hudi) before the exact key
+        filter. The bucket tier costs a Spark job (the engine hash of
+        the keys), paid only when more than one file is left to cut."""
+        import pyarrow as pa
 
-                kdf = self.spark.createDataFrame(
-                    [(k,) for k in sorted(rks)],
-                    "_hoodie_record_key string",
-                )
-                hits = probe_blooms(self.spark, kdf, blooms)
-                candidates = [
-                    f for f in candidates if f not in blooms or f in hits
-                ]
-        if not candidates:
-            return self._logical(self._read_base(commit).limit(0), commit)
-        df = self._apply_dvs(self._read_parquet(candidates, commit), commit)
+        commit = self._commit(version)
+        rks = sorted({_record_key_of(k) for k in keys})
+        kdf = self.spark.createDataFrame(
+            [(k,) for k in rks], "_hoodie_record_key string"
+        )
+        rows = pa.table({"_hoodie_record_key": pa.array(rks, pa.string())})
+        if self.bucket_count and len(self._plan_rewrite(commit, rows)[0]) > 1:
+            rows = self._plan_rows(kdf)
+        keep = self._rewrite_candidates(commit, kdf, rows)[0]
         return self._logical(
-            df.filter(F.col("_hoodie_record_key").isin(*sorted(rks))),
+            self._serve_pruned(commit, keep).filter(
+                F.col("_hoodie_record_key").isin(*rks)
+            ),
             commit,
         )
 
@@ -1417,7 +1347,7 @@ class LakehouseTable:
         exact — a live file lacks a footer count (adopted files before
         their first rewrite) or unmerged MoR log files hold rows the
         footers don't see. Live deletion vectors are subtracted via the
-        same O(deleted rows) sidecar semi-join ``metadata_agg`` uses —
+        same O(deleted rows) sidecar count ``metadata_agg`` uses —
         absent beats wrong."""
         c = self._commit(None)
         rc = [c.row_counts.get(f) for f in c.files]
@@ -1425,17 +1355,7 @@ class LakehouseTable:
         if not any(r is None for r in rc) and not c.log_files:
             num_rows = sum(rc)
             if c.dv_files and num_rows:
-                dv = (
-                    self.spark.read.parquet(
-                        *[fsio.resolve(self.path, f) for f in c.dv_files]
-                    )
-                    .select("file_name", "pos")
-                    .distinct()
-                )
-                live = self.spark.createDataFrame(
-                    [(f,) for f in c.files], "file_name string"
-                )
-                num_rows -= dv.join(live, "file_name", "semi").count()
+                num_rows -= sum(self._dv_counts(c).values())
         return {
             "format": "lakehouse",
             "location": self.path,
@@ -1891,7 +1811,7 @@ class LakehouseTable:
                 # down; logs are unindexed until compaction, as in
                 # Hudi), NOT a full-table diff. Post/insert split by
                 # the same key probe the CoW branch uses.
-                pre_source = self._read_rt_physical().drop(
+                pre_source = self._read_physical().drop(
                     "_hoodie_file_name"
                 )
                 mor_cdc = self._classify_upsert_cdc(
@@ -2297,7 +2217,7 @@ class LakehouseTable:
         prev = self._commit_for_write()
         if not prev.log_files:
             return prev
-        rt = self._read_rt_physical()  # files keep PHYSICAL names
+        rt = self._read_physical()  # files keep PHYSICAL names
         commit_time = mf.make_commit_time()
         files = self._write_files(
             self._bucket_align(rt), f"c{prev.version + 1:05d}"
@@ -2451,22 +2371,11 @@ class LakehouseTable:
         prev = self._commit_for_write()
         if not prev.dv_files:
             return None
-        dv = self.spark.read.parquet(
-            *[fsio.resolve(self.path, f) for f in prev.dv_files]
-        ).select("file_name", "pos")
-        # per-file deleted counts: O(deleted rows) in, O(files) out
-        per_file = {
-            r["file_name"]: r["n"]
-            for r in dv.groupBy("file_name").agg(
-                F.count_distinct("pos").alias("n")
-            ).collect()
-        }
-        live = set(prev.files)
+        per_file = self._dv_counts(prev)
         victims = sorted(
             f
             for f, dead in per_file.items()
-            if f in live
-            and prev.row_counts.get(f)
+            if prev.row_counts.get(f)
             and dead / prev.row_counts[f] >= min_deleted_ratio
         )
         if not victims:
@@ -2483,7 +2392,7 @@ class LakehouseTable:
         # files (Delta's purge drops the DV descriptors with the
         # rewrite) — one O(deleted rows) filter, empty set drops the
         # sidecars entirely
-        surviving = dv.filter(
+        surviving = self._dv_rows(prev).filter(
             F.col("file_name").isin([f for f in untouched if f in per_file])
         )
         new_dvs: list[str] = []
@@ -2988,16 +2897,10 @@ class LakehouseTable:
     def _write_files(
         self, df: DataFrame, commit_dir: str, log: bool = False
     ) -> list[str]:
-        sub = "log" if log else "data"
-        # "/" not os.path.join: rel_dir is recorded in the MANIFEST,
-        # which must be byte-stable across host OSes
-        rel_dir = f"{sub}/{commit_dir}-{uuid.uuid4().hex[:8]}"
-        out = fsio.join(self.path, rel_dir)
         # _hoodie_file_name is a READ-time column (_metadata.file_name);
         # persisting it would accrete a stale column on every rewrite.
         if "_hoodie_file_name" in df.columns:
             df = df.drop("_hoodie_file_name")
-        writer = df.write.mode("error")
         part_tokens: list[str] = []
         if self.partition_by and not log:
             # duplicate the partition column into hive-style dirs (__pp=v)
@@ -3016,8 +2919,23 @@ class LakehouseTable:
             # then arithmetic — see create()'s bucket_count docs.
             df = df.withColumn("__bk", self._bucket_expr())
             part_tokens.append("__bk")
-        if part_tokens:
-            writer = df.write.mode("error").partitionBy(*part_tokens)
+        return self._write_dir(
+            df, f"{'log' if log else 'data'}/{commit_dir}", part_tokens
+        )
+
+    def _write_dir(
+        self, df: DataFrame, prefix: str, partition_by: list[str] = ()
+    ) -> list[str]:
+        """Write ``df`` as parquet into a fresh ``<prefix>-<uuid8>`` dir
+        under the table root (hive-partitioned by ``partition_by``) and
+        return the written files' table-relative paths, sorted. The
+        prefix joins with "/", not ``os.path.join``: these paths are
+        recorded in the MANIFEST, which must be byte-stable across host
+        OSes."""
+        out = fsio.join(self.path, f"{prefix}-{uuid.uuid4().hex[:8]}")
+        writer = df.write.mode("error")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
         writer.parquet(out)
         return sorted(
             fsio.relpath(p, self.path)
@@ -3188,98 +3106,45 @@ class LakehouseTable:
         hi=None,
         version: int | None = None,
     ) -> DataFrame:
-        """Stats-pruned range read: skip every file whose footer
-        [min, max] for ``col`` cannot intersect [lo, hi] (driver-side
-        metadata check against the commit's ``col_stats``), then apply
-        the exact filter on the surviving scan — where Spark's own
-        row-group skipping finishes the job. After
-        ``optimize(cluster_by=[col])`` file ranges on ``col`` are
-        disjoint, so a selective range reads O(matching files), not
-        O(table) — Delta data skipping / Hudi column-stats-index
-        semantics on the manifest. Files without recorded stats are
-        scanned conservatively; MoR logs are always scanned.
-
-        ``col`` is the LOGICAL name; stats are keyed by physical."""
-        from hudi_and_delta_showcase_spark.tables.iceberg_meta import (
-            _interval_can_match,
+        """Stats-pruned range read, the single-column form of
+        ``read_matching``: ``[(col, "=", lo)]`` when ``lo == hi`` (the
+        column blooms answer too), otherwise a ``>=`` / ``<=`` conjunct
+        per non-None bound. Files whose footer [min, max] for ``col``
+        cannot intersect [lo, hi] are skipped; after
+        ``optimize(cluster_by=[col])`` a selective range reads
+        O(matching files). ``col`` is the LOGICAL name."""
+        if lo is not None and lo == hi:
+            return self.read_matching([(col, "=", lo)], version)
+        bounds = ((">=", lo), ("<=", hi))
+        return self.read_matching(
+            [(col, op, v) for op, v in bounds if v is not None], version
         )
 
-        commit = self._commit(version)
-        col = self._phys_name(col, commit)
-        keep = []
-        for f in commit.files:
-            rng = commit.col_stats.get(f, {}).get(col)
-            if rng is None:
-                keep.append(f)
-            # the shared compare: type mismatches scan conservatively
-            # and temporal literals coerce against the index's
-            # ISO-string bounds (r12)
-            elif (
-                lo is None or _interval_can_match(rng[0], rng[1], ">=", lo)
-            ) and (
-                hi is None or _interval_can_match(rng[0], rng[1], "<=", hi)
-            ):
-                keep.append(f)
-        if lo is not None and hi is not None and lo == hi:
-            # column-bloom tier (Delta bloomFilter column index): for
-            # EQUALITY reads, probe each candidate's per-column bloom.
-            # Blooms are grouped by their recorded hash type and the
-            # literal is replayed under each type, so blooms built
-            # before a type widening still answer correctly (an
-            # overflowing narrow cast can only mis-hash for a value the
-            # narrow file could not contain anyway).
-            by_type: dict[str, dict[str, str]] = {}
-            for f in keep:
-                ent = commit.column_blooms.get(f, {}).get(col)
-                if ent is not None:
-                    by_type.setdefault(ent[0], {})[f] = ent[1]
-            if by_type:
-                from hudi_and_delta_showcase_spark.tables.bloom import (
-                    probe_blooms,
-                    typed_literal_df,
-                )
-
-                hits: set[str] = set()
-                for t_str, blooms in by_type.items():
-                    keys_df = typed_literal_df(self.spark, col, lo, t_str)
-                    hits |= probe_blooms(
-                        self.spark, keys_df, blooms, key_col=col
-                    )
-                keep = [
-                    f
-                    for f in keep
-                    if col not in commit.column_blooms.get(f, {}) or f in hits
-                ]
-        df = self._serve_pruned(commit, keep)
-        if lo is not None:
-            df = df.filter(F.col(col) >= lo)
-        if hi is not None:
-            df = df.filter(F.col(col) <= hi)
-        return self._logical(df, commit)
-
     def _serve_pruned(self, commit: "mf.Commit", keep: list[str]):
-        """Serve a stats-pruned file subset PHYSICALLY (caller applies
-        exact filters, then ``_logical``): MoR merges the pruned base
-        against ALL logs (log rows are never stats-pruned), CoW applies
-        live DVs; an empty keep set serves a schema-stable empty scan."""
-        if self.table_type == MERGE_ON_READ and commit.log_files:
-            pruned = dataclasses.replace(commit, files=keep)
-            base = self._read_base(pruned)
-            log = self._read_parquet(commit.log_files, commit)
-            df = base.unionByName(log, allowMissingColumns=True)
-            order = [F.desc("_hoodie_commit_time")]
-            if self.precombine:
-                order.append(F.desc(self.precombine))
-            order += [F.desc(t) for t in self.tiebreakers]
-            w = Window.partitionBy(*self._resolution_cols()).orderBy(*order)
-            return (
-                df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        if keep:
-            return self._apply_dvs(self._read_parquet(keep, commit), commit)
-        return self._read_base(commit).limit(0).filter(F.lit(False))
+        """Serve a pruned subset of ``commit``'s base files PHYSICALLY
+        (caller applies exact filters, then ``_logical``), live DVs
+        applied. MoR with outstanding logs merges the base against ALL
+        logs (log rows are never pruned) — the `_rt` merge, see
+        ``read_rt``; an empty keep set otherwise serves a schema-stable
+        empty scan."""
+        has_logs = self.table_type == MERGE_ON_READ and commit.log_files
+        if not keep and not has_logs:
+            return self._read_base(commit).limit(0).filter(F.lit(False))
+        base = self._read_base(dataclasses.replace(commit, files=keep))
+        if not has_logs:
+            return base
+        log = self._read_parquet(commit.log_files, commit)
+        df = base.unionByName(log, allowMissingColumns=True)
+        order = [F.desc("_hoodie_commit_time")]
+        if self.precombine:
+            order.append(F.desc(self.precombine))
+        order += [F.desc(t) for t in self.tiebreakers]
+        w = Window.partitionBy(*self._resolution_cols()).orderBy(*order)
+        return (
+            df.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
 
     def read_matching(
         self, predicate, version: int | None = None
@@ -3291,9 +3156,9 @@ class LakehouseTable:
         is provably disjoint with their footer [min, max] (driver-side
         against the commit's ``col_stats``); equality conjuncts
         additionally probe the per-column blooms where recorded; the
-        exact filters land on the surviving scan for row-group
-        skipping. ``read_where`` stays the single-column range
-        convenience over the same machinery."""
+        exact filters (``_predicate_filter``: temporal literals are
+        timezone-safe) land on the surviving scan for row-group
+        skipping. ``read_where`` is the single-column form."""
         from hudi_and_delta_showcase_spark.tables.iceberg_meta import (
             _interval_can_match,
             _normalize_predicate,
@@ -3421,17 +3286,7 @@ class LakehouseTable:
         if not reasons:
             n = sum(commit.row_counts[f] for f in commit.files)
             if commit.dv_files and n:
-                dv = (
-                    self.spark.read.parquet(
-                        *[fsio.resolve(self.path, f) for f in commit.dv_files]
-                    )
-                    .select("file_name", "pos")
-                    .distinct()
-                )
-                live = self.spark.createDataFrame(
-                    [(f,) for f in commit.files], "file_name string"
-                )
-                n -= dv.join(live, "file_name", "semi").count()
+                n -= sum(self._dv_counts(commit).values())
             schema = Ty.StructType(
                 [Ty.StructField("count_rows", Ty.LongType(), False)]
                 + [
@@ -3473,19 +3328,15 @@ class LakehouseTable:
         ).select(
             F.col("_hoodie_record_key"), self._dv_file_col().alias("file")
         )
-        rel_dir = f"_index/ri-c{version:05d}-{uuid.uuid4().hex[:8]}"
-        scan.write.parquet(fsio.join(self.path, rel_dir))
-        return sorted(
-            fsio.relpath(p, self.path)
-            for p in fsio.walk_files(
-                fsio.join(self.path, rel_dir), ".parquet"
-            )
-        )
+        return self._write_dir(scan, f"_index/ri-c{version:05d}")
 
     def _ri_scan(self, commit: mf.Commit) -> DataFrame:
-        return self.spark.read.parquet(
-            *[fsio.resolve(self.path, f) for f in commit.ri_files]
-        )
+        """The commit's record-index sidecar rows under their pinned
+        ``(_hoodie_record_key string, file string)`` schema — no
+        footer-inference job."""
+        return self.spark.read.schema(
+            "_hoodie_record_key string, file string"
+        ).parquet(*[fsio.resolve(self.path, f) for f in commit.ri_files])
 
     def _probe_ri_hits(
         self,
@@ -3494,23 +3345,22 @@ class LakehouseTable:
         stamped: DataFrame,
     ) -> tuple[list[str], list[str]]:
         """Exact key->file probe via the record index: scan the skinny
-        index sidecar, broadcast the batch's distinct keys into it, and
-        keep only affected files that actually hold a batch key. The
-        scan is O(index), the broadcast O(batch), the collected hit
-        list O(batch keys x replication) — never O(table data). Unlike
-        the range/bloom tiers this has no false positives from
-        overlapping ranges, so it prunes even unclustered tables."""
+        index sidecar, semi-join it against the batch's broadcast keys,
+        and keep only affected files that actually hold a batch key.
+        The scan is O(index), the broadcast O(batch), the collected hit
+        list O(files hit) — never O(table data). Unlike the range/bloom
+        tiers this has no false positives from overlapping ranges, so
+        it prunes even unclustered tables."""
         if len(affected) <= 1 or not prev.ri_files:
             return affected, []
-        keys = stamped.select(
-            F.col("_hoodie_record_key").alias("__k")
-        ).distinct()
+        keys = stamped.select(F.col("_hoodie_record_key").alias("__k"))
         hits = {
             r.file
             for r in self._ri_scan(prev)
             .join(
                 F.broadcast(keys),
                 F.col("_hoodie_record_key") == F.col("__k"),
+                "left_semi",
             )
             .select("file")
             .distinct()
@@ -3520,14 +3370,17 @@ class LakehouseTable:
         return hit, [f for f in affected if f not in hits]
 
     def _rewrite_candidates(
-        self, prev: mf.Commit, stamped: DataFrame
+        self, prev: mf.Commit, stamped: DataFrame, plan_rows=None
     ) -> tuple[list[str], list[str], dict[str, int]]:
         """(files to rewrite, files carried over, ``<tier>_skipped_files``
-        counts) for a CoW upsert or delete of the ``stamped`` batch:
-        the driver-side plan, then the opt-in record-index and bloom
-        probes over what the plan left."""
+        counts) for a CoW upsert or delete of the ``stamped`` batch —
+        or the files a point lookup of its keys must scan: the
+        driver-side plan over ``plan_rows`` (``_plan_rows(stamped)``
+        unless given), then the opt-in record-index and bloom probes
+        over what the plan left."""
         affected, carried, skipped = self._plan_rewrite(
-            prev, self._plan_rows(stamped)
+            prev,
+            self._plan_rows(stamped) if plan_rows is None else plan_rows,
         )
         ri_missed: list[str] = []
         bloom_missed: list[str] = []
@@ -3574,7 +3427,8 @@ class LakehouseTable:
           ``c`` value; null values match the hive default partition.
           A global index skips this tier: a key's old row may live in
           any partition.
-        * bucket — the file's ``__bk=`` id is one of the batch's.
+        * bucket — the file's ``__bk=`` id is one of the batch's (when
+          ``plan_rows`` carries ``__bk``).
         * key range — some batch key of the file's partition (every
           batch key when the file is not partition-matched) lies in the
           file's manifest [min, max], found by bisecting the sorted
@@ -3611,7 +3465,7 @@ class LakehouseTable:
                 start = end
         buckets = (
             set(plan_rows["__bk"].unique().to_pylist())
-            if self.bucket_count else None
+            if "__bk" in plan_rows.column_names else None
         )
         affected: list[str] = []
         carried: list[str] = []
@@ -3954,6 +3808,28 @@ class LakehouseTable:
             F.col("_metadata.file_path"), fsio.uri_path(self.path) + "/", -1
         )
 
+    def _dv_rows(self, commit: mf.Commit) -> DataFrame:
+        """The commit's DV sidecar rows. Sidecars are engine-written
+        with exactly ``(file_name string, pos long)``: the pinned
+        schema spares Spark's footer-inference job on every read."""
+        return self.spark.read.schema("file_name string, pos long").parquet(
+            *[fsio.resolve(self.path, f) for f in commit.dv_files]
+        )
+
+    def _dv_counts(self, commit: mf.Commit) -> dict[str, int]:
+        """Rows the commit's deletion vectors remove from each LIVE
+        file (what its footer row count overstates): distinct
+        positions, O(deleted rows) in, O(files) out."""
+        live = set(commit.files)
+        return {
+            r["file_name"]: r["n"]
+            for r in self._dv_rows(commit)
+            .groupBy("file_name")
+            .agg(F.count_distinct("pos").alias("n"))
+            .collect()
+            if r["file_name"] in live
+        }
+
     def _apply_dvs(self, df: DataFrame, commit: mf.Commit) -> DataFrame:
         """Filter out rows marked deleted by the commit's deletion
         vectors: anti-join the scan's native (relative file path,
@@ -3967,21 +3843,7 @@ class LakehouseTable:
         longer in the live set simply never match."""
         if not commit.dv_files:
             return df
-        # DV sidecars are engine-written with exactly (file_name string,
-        # pos long) — pin that schema instead of paying Spark's
-        # footer-sampling inference job on every DV-table read (r14 opt)
-        from pyspark.sql.types import LongType, StringType, StructField
-        from pyspark.sql.types import StructType as _St
-
-        dv_schema = _St(
-            [
-                StructField("file_name", StringType(), True),
-                StructField("pos", LongType(), True),
-            ]
-        )
-        dv = self.spark.read.schema(dv_schema).parquet(
-            *[fsio.resolve(self.path, f) for f in commit.dv_files]
-        ).select("file_name", "pos")
+        dv = self._dv_rows(commit)
         return (
             df.withColumn("__dv_file", self._dv_file_col())
             .withColumn("__dv_pos", F.col("_metadata.row_index"))
@@ -4046,13 +3908,7 @@ class LakehouseTable:
         changes = changes.withColumn(
             "_commit_version", F.lit(version)
         ).withColumn("_cdc_commit_time", F.lit(commit_time))
-        rel_dir = f"cdc/c{version:05d}-{uuid.uuid4().hex[:8]}"
-        out = fsio.join(self.path, rel_dir)
-        changes.write.mode("error").parquet(out)
-        return sorted(
-            fsio.relpath(p, self.path)
-            for p in fsio.walk_files(out, ".parquet")
-        )
+        return self._write_dir(changes, f"cdc/c{version:05d}")
 
     def read_changes(
         self, begin_version: int = 0, end_version: int | None = None
@@ -4151,13 +4007,7 @@ class LakehouseTable:
 
     def _write_dv_files(self, hits: DataFrame, commit_dir: str) -> list[str]:
         """Write ``(file_name, pos)`` rows as a DV sidecar under dv/."""
-        rel_dir = f"dv/{commit_dir}-{uuid.uuid4().hex[:8]}"
-        out = fsio.join(self.path, rel_dir)
-        hits.write.mode("error").parquet(out)
-        return sorted(
-            fsio.relpath(p, self.path)
-            for p in fsio.walk_files(out, ".parquet")
-        )
+        return self._write_dir(hits, f"dv/{commit_dir}")
 
     def _read_base(self, commit: mf.Commit) -> DataFrame:
         return self._apply_dvs(self._read_parquet(commit.files, commit), commit)

@@ -169,3 +169,29 @@ def test_timestamp_skipping_through_export_dialects(spark, tmp_path):
         pruned = reader(spark, t.path, predicate=pred)
         assert len(pruned.inputFiles()) == 1, reader.__name__
         assert pruned.count() == 20, reader.__name__
+
+
+@pytest.mark.parametrize("zone", ["America/Los_Angeles", "Asia/Tokyo"])
+def test_read_where_datetime_bounds_under_non_utc_session(spark, tmp_path, zone):
+    """``read_where`` is ``read_matching``'s single-column form, so its
+    exact filter takes the timezone-safe temporal literals: datetime
+    bounds on a ``timestamp_ntz`` column select the same wall-clock rows
+    whatever the session zone (a raw ``F.col(c) >= datetime`` compare
+    shifted them by the zone offset and returned nothing)."""
+    from datetime import datetime
+
+    df = spark.sql(
+        "SELECT CAST(id AS INT) AS k, timestampadd(HOUR, CAST(id AS INT), "
+        "TIMESTAMP_NTZ'2024-01-01 00:00:00') AS ts FROM range(10)"
+    ).coalesce(2)
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), df, key_cols=["k"])
+    lo, hi = datetime(2024, 1, 1, 5), datetime(2024, 1, 1, 7)
+    saved = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        got = sorted(r.k for r in t.read_where("ts", lo, hi).collect())
+        point = [r.k for r in t.read_where("ts", lo, lo).collect()]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved)
+    assert got == [5, 6, 7]
+    assert point == [5]
