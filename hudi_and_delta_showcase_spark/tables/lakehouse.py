@@ -1299,8 +1299,7 @@ class LakehouseTable:
         value becomes a new row in that partition and the old partition's
         row survives, identically in CoW (partition-scoped rewrite) and
         MoR `_rt` (per-partition window)."""
-        commit = self._commit(version)
-        return self._logical(self._read_physical(version), commit)
+        return self.read(version)
 
     def read_for_keys(
         self, keys: list, version: int | None = None
