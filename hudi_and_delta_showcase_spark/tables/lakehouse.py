@@ -1305,28 +1305,32 @@ class LakehouseTable:
         self, keys: list, version: int | None = None
     ) -> DataFrame:
         """Point-lookup read path: ``keys`` are key-column values (a
-        tuple per composite key) or record-key strings. The files to
-        scan are picked by the writers' planner (``_rewrite_candidates``
-        over the keys as a batch with no partition values): the key-range
-        and bucket tiers on the driver, then the record-index and bloom
-        probes where the table keeps them. A k-key lookup on a clustered
-        or indexed table reads O(k) files; files with unknown ranges are
-        scanned conservatively. On MoR the base files are pruned the
-        same way and merged with every outstanding log (logs are
-        unindexed until compaction, as in Hudi) before the exact key
-        filter. The bucket tier costs a Spark job (the engine hash of
-        the keys), paid only when more than one file is left to cut."""
+        tuple per composite key) or record-key strings. The writers'
+        planner picks the files: the key-range tier on the driver, then,
+        only where more than one file is left, the bucket, record-index
+        and bloom tiers of ``_rewrite_candidates`` (a Spark job each).
+        Files with unknown ranges are scanned conservatively. MoR base
+        files are pruned too — by key range alone while logs are
+        outstanding, so planning stays job-free — and merged with every
+        log (unindexed until compaction, as in Hudi) before the exact
+        key filter."""
         import pyarrow as pa
 
         commit = self._commit(version)
         rks = sorted({_record_key_of(k) for k in keys})
-        kdf = self.spark.createDataFrame(
-            [(k,) for k in rks], "_hoodie_record_key string"
-        )
         rows = pa.table({"_hoodie_record_key": pa.array(rks, pa.string())})
-        if self.bucket_count and len(self._plan_rewrite(commit, rows)[0]) > 1:
-            rows = self._plan_rows(kdf)
-        keep = self._rewrite_candidates(commit, kdf, rows)[0]
+        keep = self._plan_rewrite(commit, rows)[0]
+        mor_logs = self.table_type == MERGE_ON_READ and commit.log_files
+        indexed = self.bucket_count or self.record_index or self.bloom_index
+        if len(keep) > 1 and indexed and not mor_logs:
+            kdf = self.spark.createDataFrame(
+                [(k,) for k in rks], "_hoodie_record_key string"
+            )
+            if self.bucket_count:
+                rows = self._plan_rows(kdf)
+            keep = self._rewrite_candidates(
+                dataclasses.replace(commit, files=keep), kdf, rows
+            )[0]
         return self._logical(
             self._serve_pruned(commit, keep).filter(
                 F.col("_hoodie_record_key").isin(*rks)
@@ -1837,7 +1841,7 @@ class LakehouseTable:
         # checkpoint is filled by the plan collect itself — one job.
         stamped = stamped.localCheckpoint(eager=False)
         affected, untouched, skipped = self._rewrite_candidates(
-            prev, stamped
+            prev, stamped, self._plan_rows(stamped)
         )
         cdc_added: list[str] = []
         add_only_cdc = False
@@ -2044,8 +2048,9 @@ class LakehouseTable:
             self._physical(keys).select(*kcols).distinct()
             .localCheckpoint(eager=False)
         )
+        stamped = self._stamp_meta(keys, commit_time)
         affected, untouched, skipped = self._rewrite_candidates(
-            prev, self._stamp_meta(keys, commit_time)
+            prev, stamped, self._plan_rows(stamped)
         )
 
         cond = None
@@ -3124,21 +3129,21 @@ class LakehouseTable:
         (caller applies exact filters, then ``_logical``), live DVs
         applied. MoR with outstanding logs merges the base against ALL
         logs (log rows are never pruned) — the `_rt` merge, see
-        ``read_rt``; an empty keep set otherwise serves a schema-stable
-        empty scan."""
-        has_logs = self.table_type == MERGE_ON_READ and commit.log_files
-        if not keep and not has_logs:
-            return self._read_base(commit).limit(0).filter(F.lit(False))
-        base = self._read_base(dataclasses.replace(commit, files=keep))
-        if not has_logs:
+        ``read_rt``. An empty keep set reads all base files' schema
+        and no rows (zero files may have no schema to infer)."""
+        base = (
+            self._read_base(dataclasses.replace(commit, files=keep))
+            if keep
+            else self._read_base(commit).limit(0).filter(F.lit(False))
+        )
+        if not (self.table_type == MERGE_ON_READ and commit.log_files):
             return base
         log = self._read_parquet(commit.log_files, commit)
         df = base.unionByName(log, allowMissingColumns=True)
-        order = [F.desc("_hoodie_commit_time")]
-        if self.precombine:
-            order.append(F.desc(self.precombine))
-        order += [F.desc(t) for t in self.tiebreakers]
-        w = Window.partitionBy(*self._resolution_cols()).orderBy(*order)
+        order = ["_hoodie_commit_time", self.precombine, *self.tiebreakers]
+        w = Window.partitionBy(*self._resolution_cols()).orderBy(
+            *[F.desc(c) for c in order if c]
+        )
         return (
             df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -3369,18 +3374,15 @@ class LakehouseTable:
         return hit, [f for f in affected if f not in hits]
 
     def _rewrite_candidates(
-        self, prev: mf.Commit, stamped: DataFrame, plan_rows=None
+        self, prev: mf.Commit, stamped: DataFrame, plan_rows
     ) -> tuple[list[str], list[str], dict[str, int]]:
         """(files to rewrite, files carried over, ``<tier>_skipped_files``
         counts) for a CoW upsert or delete of the ``stamped`` batch —
         or the files a point lookup of its keys must scan: the
-        driver-side plan over ``plan_rows`` (``_plan_rows(stamped)``
-        unless given), then the opt-in record-index and bloom probes
-        over what the plan left."""
-        affected, carried, skipped = self._plan_rewrite(
-            prev,
-            self._plan_rows(stamped) if plan_rows is None else plan_rows,
-        )
+        driver-side plan over ``plan_rows`` (see ``_plan_rows``), then
+        the opt-in record-index and bloom probes over what the plan
+        left."""
+        affected, carried, skipped = self._plan_rewrite(prev, plan_rows)
         ri_missed: list[str] = []
         bloom_missed: list[str] = []
         if self.record_index:

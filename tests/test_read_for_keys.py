@@ -48,3 +48,27 @@ def test_mor_lookup_with_outstanding_logs_prunes_base_files(spark, tmp_path):
     ]
     base = [f for f in out.inputFiles() if "/data/" in f]
     assert 0 < len(base) < len(c.files)
+
+
+def test_mor_lookup_of_log_only_and_missing_keys(spark, tmp_path):
+    """A key that lives only in a log, past every base file's key range,
+    leaves no base file to scan; the lookup still serves the log row,
+    and a key held nowhere serves no row. A converted table carries no
+    recorded schema, so an empty base file list must never reach the
+    schema-inferring scan."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, 10, 100), (2, 20, 100), (3, 30, 100)], "k int, v int, sq int"
+    ).coalesce(2).write.parquet(path)
+    t = LakehouseTable.convert(
+        spark, path, key_cols=["k"], precombine="sq", table_type="mor"
+    )
+    t.upsert(spark.createDataFrame([(9, 90, 200)], "k int, v int, sq int"))
+    c = t._commit(None)
+    assert c.log_files and not c.table_schema
+    assert [(r.k, r.v) for r in t.read_for_keys([9]).collect()] == [(9, 90)]
+    assert sorted(
+        (r.k, r.v) for r in t.read_for_keys([9, 2]).collect()
+    ) == [(2, 20), (9, 90)]
+    assert t.read_for_keys([42]).collect() == []
+    assert t.read_for_keys([]).collect() == []
