@@ -72,3 +72,6 @@ def test_mor_lookup_of_log_only_and_missing_keys(spark, tmp_path):
     ) == [(2, 20), (9, 90)]
     assert t.read_for_keys([42]).collect() == []
     assert t.read_for_keys([]).collect() == []
+    # a predicate read whose stats prune every base file merges the same way
+    got = t.read_matching([("v", "=", 90)]).collect()
+    assert [(r.k, r.v) for r in got] == [(9, 90)]
