@@ -44,6 +44,7 @@ from __future__ import annotations
 import bisect
 import copy
 import dataclasses
+import datetime
 import json
 import os
 import re
@@ -167,17 +168,26 @@ def _parse_partition_value(v: str, partition_type: str):
     return v
 
 
-def _record_key_of(key) -> str:
+def _record_key_of(key, jvm) -> str:
     """The record key the writer stamps for a lookup key (a scalar or a
     tuple of key-column values): ``concat_ws("|", cast(part as
-    string))`` skips null parts and prints booleans as ``true`` /
-    ``false``. A record-key string passes through unchanged."""
+    string))`` skips null parts, prints booleans as ``true`` /
+    ``false``, doubles as the running JVM's ``Double.toString``
+    (``1.0E20``, ``NaN``; no Spark job) and timestamps without the
+    fraction's trailing zeros. A record-key string passes through
+    unchanged."""
+
+    def cast(v) -> str:
+        if isinstance(v, bool):
+            return str(v).lower()
+        if isinstance(v, float):
+            return jvm.java.lang.Double.toString(float(v))
+        if isinstance(v, datetime.datetime) and v.tzinfo is None:
+            return str(v).rstrip("0") if v.microsecond else str(v)
+        return str(v)
+
     parts = key if isinstance(key, (tuple, list)) else (key,)
-    return "|".join(
-        str(v).lower() if isinstance(v, bool) else str(v)
-        for v in parts
-        if v is not None
-    )
+    return "|".join(cast(v) for v in parts if v is not None)
 
 
 class _SortedKeys:
@@ -1317,7 +1327,7 @@ class LakehouseTable:
         import pyarrow as pa
 
         commit = self._commit(version)
-        rks = sorted({_record_key_of(k) for k in keys})
+        rks = sorted({_record_key_of(k, self.spark._jvm) for k in keys})
         rows = pa.table({"_hoodie_record_key": pa.array(rks, pa.string())})
         keep = self._plan_rewrite(commit, rows)[0]
         mor_logs = self.table_type == MERGE_ON_READ and commit.log_files
@@ -2136,83 +2146,6 @@ class LakehouseTable:
             cdc_files=cdc_added,
         )
 
-    def _optimize_partition(
-        self,
-        prev: mf.Commit,
-        value: str,
-        target_files: int | None,
-        cluster_by: list[str] | None,
-        zorder_by: list[str] | None,
-    ) -> mf.Commit:
-        """Delta ``OPTIMIZE t WHERE part = v``: rewrite ONE partition's
-        files, carry every other file with its skipping indexes intact
-        — at 100 TB the difference between touching the hot partition
-        and rewriting the table. Deletion vectors on the rewritten
-        files materialize (their old entries reference dead file names
-        and simply never match again); DVs on carried files stay live.
-        MoR log files must be compacted first (they are unindexed by
-        partition), and spec-evolved tables are refused — a value means
-        different things under different specs."""
-        if not self.partition_by:
-            raise ValueError("where_partition requires a partitioned table")
-        if len(self.partition_specs) > 1:
-            raise ValueError(
-                "where_partition on a spec-evolved table is ambiguous; "
-                "run a full optimize to converge the layout first"
-            )
-        if prev.log_files:
-            raise RuntimeError("compact() MoR log files before a scoped "
-                               "optimize")
-        scoped = [
-            f for f in prev.files if self._partition_value_of(f) == value
-        ]
-        if not scoped:
-            return prev
-        carried = [f for f in prev.files if f not in set(scoped)]
-        df = self._apply_dvs(self._read_parquet(scoped, prev), prev)
-        cluster_by = (
-            [self._phys_name(c, prev) for c in cluster_by]
-            if cluster_by
-            else None
-        )
-        zorder_by = (
-            [self._phys_name(c, prev) for c in zorder_by]
-            if zorder_by
-            else None
-        )
-        n = target_files or 1
-        if zorder_by:
-            z, _zb = self._morton_key(df, zorder_by)
-            df = (
-                df.withColumn("__z", z)
-                .repartitionByRange(n, F.col("__z"))
-                .sortWithinPartitions("__z", *zorder_by)
-                .drop("__z")
-            )
-        elif cluster_by:
-            df = df.repartitionByRange(
-                n, *[F.col(c) for c in cluster_by]
-            ).sortWithinPartitions(*cluster_by)
-        else:
-            df = df.coalesce(n)
-        df = self._bucket_align(
-            df, n, (cluster_by or []) + (zorder_by or [])
-        )
-        new_files = self._write_files(df, f"c{prev.version + 1:05d}")
-        return self._commit_rewrite(
-            prev,
-            "optimize",
-            new_files,
-            carried,
-            {
-                "optimize_where": f"{self.partition_by}={value}",
-                "before_files": len(prev.files),
-                "rewritten_files": len(scoped),
-                "carried_over_files": len(carried),
-                "after_files": len(new_files),
-            },
-        )
-
     def compact(self) -> mf.Commit:
         """MoR compaction: fold log files into a fresh base (the async
         compaction the reference schedules, README.md:605,918)."""
@@ -2221,20 +2154,9 @@ class LakehouseTable:
         prev = self._commit_for_write()
         if not prev.log_files:
             return prev
-        rt = self._read_physical()  # files keep PHYSICAL names
-        commit_time = mf.make_commit_time()
-        files = self._write_files(
-            self._bucket_align(rt), f"c{prev.version + 1:05d}"
-        )
-        return self._commit_rewrite(
-            prev,
-            "compact",
-            files,
-            [],
+        return self._restack(
+            prev, "compact", prev.files, None,
             {"compacted_log_files": len(prev.log_files)},
-            commit_time=commit_time,
-            log_files=[],
-            dv_files=[],
         )
 
     # ------------------------------------------------------------------ #
@@ -2263,95 +2185,92 @@ class LakehouseTable:
         ``read_where`` prunes on any of them — linear clustering can
         only ever serve its leading column.
 
+        ``where_partition`` (Delta ``OPTIMIZE t WHERE part = v``):
+        rewrite ONE partition's files, carry every other file with its
+        skipping indexes intact — at 100 TB the difference between
+        touching the hot partition and rewriting the table. Deletion
+        vectors on the rewritten files materialize (their old entries
+        reference dead file names and simply never match again); DVs on
+        carried files stay live. MoR log files must be compacted first
+        (they are unindexed by partition), and spec-evolved tables are
+        refused — a value means different things under different specs.
+
         ``incremental=True`` (Delta liquid-clustering economics, with
-        ``cluster_by`` only): restack ONLY the files written since the
-        last clustering commit with the same spec — O(new data) per
-        maintenance run instead of O(table), the difference between a
-        nightly touch-up and a multi-PB rewrite at 100 TB. Each run
-        adds one internally-disjoint file GENERATION; a selective read
-        then hits ~1 file per generation (vs 1 after a full recluster),
-        and a periodic full ``optimize(cluster_by=...)`` collapses the
-        generations. Already-clustered files are carried over with
-        their skipping indexes; deletion vectors on them stay live."""
+        ``cluster_by`` or ``zorder_by``): restack ONLY the files not
+        produced by a prior clustering commit with the same spec —
+        O(new data) per maintenance run instead of O(table), the
+        difference between a nightly touch-up and a multi-PB rewrite at
+        100 TB. Each run adds one internally-disjoint file GENERATION; a
+        selective read then hits ~1 file per generation (vs 1 after a
+        full recluster), and a periodic full ``optimize(cluster_by=...)``
+        collapses the generations. Already-clustered files are carried
+        over with their skipping indexes; deletion vectors on them stay
+        live. The z-order variant reuses the quantile boundaries
+        recorded by the last FULL z-order commit, so every generation
+        buckets on the same Morton curve (fresh boundaries would put the
+        same value in different buckets across generations, quietly
+        breaking the files' z-range disjointness). CoW only — compact
+        MoR logs first (the log fold would force a full-table window
+        anyway)."""
         if cluster_by and zorder_by:
             raise ValueError("cluster_by and zorder_by are exclusive")
         prev = self._commit_for_write()
+        # callers address cluster/z-order columns by LOGICAL name
+        by = [self._phys_name(c, prev) for c in cluster_by or zorder_by or []]
+        spec_key = "zorder_spec" if zorder_by else "cluster_spec"
+        zbounds = {} if zorder_by else None
         if where_partition is not None:
             if incremental:
                 raise ValueError(
                     "where_partition and incremental are exclusive "
                     "(a scoped restack is not a clustering generation)"
                 )
-            return self._optimize_partition(
-                prev, str(where_partition), target_files, cluster_by,
-                zorder_by,
-            )
-        if incremental:
-            return self._optimize_incremental(
-                prev, target_files, cluster_by, zorder_by
-            )
-        df = self._read_physical()  # MoR folds logs; PHYSICAL names
-        # callers address cluster/z-order columns by LOGICAL name
-        cluster_by = (
-            [self._phys_name(c, prev) for c in cluster_by]
-            if cluster_by
-            else cluster_by
-        )
-        zorder_by = (
-            [self._phys_name(c, prev) for c in zorder_by]
-            if zorder_by
-            else zorder_by
-        )
-        version = prev.version + 1
-        commit_time = mf.make_commit_time()
-        n = target_files or 1
-        zbounds: dict[str, list[float]] = {}
-        if zorder_by:
-            z, zbounds = self._morton_key(df, zorder_by)
-            df = df.withColumn("__z", z)
-            range_cols = (
-                [self.partition_by] if self.partition_by else []
-            ) + ["__z"]
-            df = (
-                df.repartitionByRange(n, *[F.col(c) for c in range_cols])
-                .sortWithinPartitions(*range_cols, *zorder_by)
-                .drop("__z")
-            )
-        elif cluster_by:
-            # Range-partition on (partition, cluster cols) so FILES get
-            # DISJOINT key ranges — row-group min/max stats and the
-            # key_ranges file-skipping index both become selective.
-            # (coalesce+sort would only sort within files, leaving every
-            # file spanning nearly the full key space.)
-            range_cols = (
-                [self.partition_by] if self.partition_by else []
-            ) + cluster_by
-            df = df.repartitionByRange(n, *[F.col(c) for c in range_cols])
-            df = df.sortWithinPartitions(*range_cols)
-        elif self.partition_by:
-            df = df.repartition(n, F.col(self.partition_by))
+            if not self.partition_by:
+                raise ValueError(
+                    "where_partition requires a partitioned table"
+                )
+            if len(self.partition_specs) > 1:
+                raise ValueError(
+                    "where_partition on a spec-evolved table is ambiguous; "
+                    "run a full optimize to converge the layout first"
+                )
+            if prev.log_files:
+                raise RuntimeError("compact() MoR log files before a scoped "
+                                   "optimize")
+            value = str(where_partition)
+            files = [
+                f for f in prev.files if self._partition_value_of(f) == value
+            ]
+            if not files:
+                return prev
+            stats = {"optimize_where": f"{self.partition_by}={value}"}
+        elif incremental:
+            if not by:
+                raise ValueError("incremental optimize requires cluster_by")
+            if prev.log_files:
+                raise RuntimeError(
+                    "incremental optimize on a MoR table with pending log "
+                    "files — run compact() first"
+                )
+            key, spec, clustered, zbounds = self._clustering()
+            if (key, spec) != (spec_key, ",".join(by)):
+                clustered, zbounds = set(), None
+            if zorder_by and zbounds is None:
+                raise RuntimeError(
+                    "incremental z-order needs a prior full "
+                    "optimize(zorder_by=...) to pin the quantile boundaries"
+                )
+            files = [f for f in prev.files if f not in clustered]
+            if not files:
+                return prev  # clustering is already current: zero-IO no-op
+            stats = {"mode": "incremental", "restacked_files": len(files)}
         else:
-            df = df.coalesce(n)
-        df = self._bucket_align(
-            df, n, (cluster_by or []) + (zorder_by or [])
-        )
-        files = self._write_files(df, f"c{version:05d}")
-        stats: dict = {"before_files": len(prev.files), "after_files": len(files)}
-        if cluster_by:
-            # record the clustering generation so incremental runs can
-            # tell clustered files from later, unclustered arrivals
-            stats["cluster_spec"] = ",".join(cluster_by)
-            stats["clustered_output"] = files
-        elif zorder_by:
-            # same for z-order, plus the quantile boundaries: an
-            # incremental run must bucket with the SAME boundaries or
-            # its Morton keys would live on a different curve
-            stats["zorder_spec"] = ",".join(zorder_by)
-            stats["clustered_output"] = files
-            stats["zorder_bounds"] = zbounds
-        return self._commit_rewrite(
-            prev, "optimize", files, [], stats,
-            commit_time=commit_time, log_files=[], dv_files=[],
+            files, stats = prev.files, {}
+        if by and where_partition is None:
+            # a clustering generation: _restack records its files
+            stats[spec_key] = ",".join(by)
+        return self._restack(
+            prev, "optimize", files, target_files or 1, stats, by, zbounds
         )
 
     def reorg_purge(self, min_deleted_ratio: float = 0.05):
@@ -2384,121 +2303,109 @@ class LakehouseTable:
         )
         if not victims:
             return None
-        version = prev.version + 1
-        commit_time = mf.make_commit_time()
-        rewritten = self._apply_dvs(
-            self._read_parquet(victims, prev), prev
-        )
-        new_files = self._write_files(rewritten, f"c{version:05d}")
-        vset = set(victims)
-        untouched = [f for f in prev.files if f not in vset]
         # shed the purged vectors: keep only rows naming surviving
         # files (Delta's purge drops the DV descriptors with the
         # rewrite) — one O(deleted rows) filter, empty set drops the
         # sidecars entirely
-        surviving = self._dv_rows(prev).filter(
-            F.col("file_name").isin([f for f in untouched if f in per_file])
-        )
-        new_dvs: list[str] = []
-        if any(f in per_file for f in untouched):
-            new_dvs = self._write_dv_files(surviving, f"c{version:05d}")
-        return self._commit_rewrite(
-            prev,
-            "purge",
-            new_files,
-            untouched,
-            {
-                "purged_files": len(victims),
-                "carried_over_files": len(untouched),
-                "written_files": len(new_files),
-                "purged_dv_rows": sum(per_file[f] for f in victims),
-            },
-            commit_time=commit_time,
+        kept = sorted(set(per_file) - set(victims))
+        dvs = self._dv_rows(prev).filter(F.col("file_name").isin(kept))
+        new_dvs = []
+        if kept:
+            new_dvs = self._write_dv_files(dvs, f"c{prev.version + 1:05d}")
+        dead = sum(per_file[f] for f in victims)
+        return self._restack(
+            prev, "purge", victims, None,
+            {"purged_files": len(victims), "purged_dv_rows": dead},
             dv_files=new_dvs,
         )
 
-    def _optimize_incremental(
+    def _restack(
         self,
         prev: mf.Commit,
-        target_files: int | None,
-        cluster_by: list[str] | None,
-        zorder_by: list[str] | None = None,
+        action: str,
+        files: list[str],
+        n: int | None,
+        stats: dict,
+        by: list[str] = (),
+        zbounds: dict | None = None,
+        **changes,
     ) -> mf.Commit:
-        """Liquid-style incremental clustering: restack only files not
-        produced by a prior clustering commit with the same spec. See
-        ``optimize``. Works for linear clustering AND z-order — the
-        z-order variant reuses the quantile boundaries recorded by the
-        last FULL z-order commit, so every generation buckets on the
-        same Morton curve (fresh boundaries would put the same value in
-        different buckets across generations, quietly breaking the
-        files' z-range disjointness). CoW only — compact MoR logs first
-        (the log fold would force a full-table window anyway)."""
-        if not cluster_by and not zorder_by:
-            raise ValueError("incremental optimize requires cluster_by")
-        if cluster_by and zorder_by:
-            raise ValueError("cluster_by and zorder_by are exclusive")
-        if prev.log_files:
-            raise RuntimeError(
-                "incremental optimize on a MoR table with pending log "
-                "files — run compact() first"
-            )
-        spec_key = "cluster_spec" if cluster_by else "zorder_spec"
-        phys = [
-            self._phys_name(c, prev) for c in (cluster_by or zorder_by)
-        ]
-        spec = ",".join(phys)
-        clustered: set[str] = set()
-        zbounds: dict[str, list[float]] | None = None
-        for c in self.history():
-            if c.action == "optimize" and c.stats.get(spec_key) == spec:
-                clustered |= set(c.stats.get("clustered_output", ()))
-                if c.stats.get("zorder_bounds"):
-                    zbounds = c.stats["zorder_bounds"]
-        if zorder_by and zbounds is None:
-            raise RuntimeError(
-                "incremental z-order needs a prior full "
-                "optimize(zorder_by=...) to pin the quantile boundaries"
-            )
-        carried = [f for f in prev.files if f in clustered]
-        stale = [f for f in prev.files if f not in clustered]
-        if not stale:
-            return prev  # clustering is already current: zero-IO no-op
-        version = prev.version + 1
+        """The one read, layout, write and commit of every maintenance
+        writer: rewrite ``files`` (live DVs applied), carry the rest.
+        MoR logs fold into the new files, except on a purge, which
+        carries them. Clustered (``by``): range-partition into ``n`` on
+        the partition column plus ``by``, or plus the Morton key of
+        ``by`` on ``zbounds`` ({} = fresh), sorted within files; else
+        hash ``n`` ways on the partition column when ``files`` span
+        several partitions, or coalesce (None keeps the read's layout).
+        A clustering spec in ``stats`` gets the new files as its
+        ``clustered_output``."""
         commit_time = mf.make_commit_time()
-        df = self._apply_dvs(self._read_parquet(stale, prev), prev).drop(
-            "_hoodie_file_name"
+        fold = action != "purge"
+        df = self._serve_pruned(
+            prev if fold else dataclasses.replace(prev, log_files=[]), files
         )
-        part_cols = [self.partition_by] if self.partition_by else []
-        if zorder_by:
-            z, _ = self._morton_key(df, phys, bounds_by_col=zbounds)
-            range_cols = part_cols + ["__z"]
+        part = [self.partition_by] if self.partition_by else []
+        if by:
+            # range-partition so FILES get disjoint (partition, by)
+            # ranges and their stats prune; a sort alone would leave
+            # every file spanning the whole key space
+            keys, tail = part + list(by), []
+            if zbounds is not None:
+                z, zbounds = self._morton_key(df, by, bounds_by_col=zbounds)
+                df, keys, tail = df.withColumn("__z", z), part + ["__z"], by
             df = (
-                df.withColumn("__z", z)
-                .repartitionByRange(
-                    target_files or 1, *[F.col(c) for c in range_cols]
-                )
-                .sortWithinPartitions(*range_cols, *phys)
+                df.repartitionByRange(n, *keys)
+                .sortWithinPartitions(*keys, *tail)
                 .drop("__z")
             )
-        else:
-            range_cols = part_cols + phys
-            df = df.repartitionByRange(
-                target_files or 1, *[F.col(c) for c in range_cols]
-            ).sortWithinPartitions(*range_cols)
-        new_files = self._write_files(df, f"c{version:05d}")
-        stats = {
-            "mode": "incremental",
-            spec_key: spec,
-            "clustered_output": new_files,
-            "restacked_files": len(stale),
-            "carried_files": len(carried),
-        }
-        if zorder_by:
-            stats["zorder_bounds"] = zbounds
-        return self._commit_rewrite(
-            prev, "optimize", new_files, carried, stats,
-            commit_time=commit_time,
+        elif n is not None:
+            spread = {self._partition_spec_value_of(f) for f in files}
+            df = (
+                df.repartition(n, F.col(self.partition_by))
+                if part and len(spread) > 1
+                else df.coalesce(n)
+            )
+        new_files = self._write_files(
+            self._bucket_align(df, n, by), f"c{prev.version + 1:05d}"
         )
+        if "cluster_spec" in stats or "zorder_spec" in stats:
+            stats["clustered_output"] = new_files
+            if zbounds is not None:
+                stats["zorder_bounds"] = zbounds
+        picked = set(files)
+        carried = [f for f in prev.files if f not in picked]
+        if not carried:
+            changes.setdefault("dv_files", [])
+        if fold:
+            changes["log_files"] = []
+        stats.update(
+            rewritten_files=len(files),
+            carried_over_files=len(carried),
+            written_files=len(new_files),
+        )
+        return self._commit_rewrite(
+            prev, action, new_files, carried, stats,
+            commit_time=commit_time, **changes,
+        )
+
+    def _clustering(self):
+        """The latest clustering spec on the timeline as ``(spec_key,
+        spec)`` (``cluster_spec`` or ``zorder_spec``, PHYSICAL column
+        names), the files of that spec's generations (its optimize
+        commits' ``clustered_output``) and its recorded z-order bounds.
+        An optimize under another spec starts over: it rewrote every
+        file the older generations held."""
+        key = spec = bounds = None
+        files: set[str] = set()
+        for c in self.history():
+            for k in ("cluster_spec", "zorder_spec"):
+                if c.action == "optimize" and c.stats.get(k):
+                    if (k, c.stats[k]) != (key, spec):
+                        key, spec, files, bounds = k, c.stats[k], set(), None
+                    files |= set(c.stats.get("clustered_output", ()))
+                    bounds = c.stats.get("zorder_bounds") or bounds
+        return key, spec, files, bounds
 
     _Z_BITS = 4  # quantile buckets per dimension = 2**_Z_BITS
 
@@ -2837,8 +2744,8 @@ class LakehouseTable:
         dead file, so the list restarts. Deletion vectors carry over
         unless the caller passes ``dv_files``: entries naming rewritten
         files are inert, but the exporters replay the DV history, so
-        only compact, full optimize and purge, which materialize
-        vectors, pass a new list."""
+        only the restacks, which materialize vectors, pass a new list
+        (empty when they carry no file; purge keeps the survivors')."""
         ri = self._write_record_index(new_files, prev.version + 1)
         index = self._index_fields(new_files)
         return self._publish(
@@ -2961,41 +2868,26 @@ class LakehouseTable:
         }
         col_stats = dict(stats)
         key_blooms: dict[str, str] = {}
-        if self.bloom_index and new_files:
-            from hudi_and_delta_showcase_spark.tables.bloom import (
-                build_file_blooms,
-            )
-
-            # key blooms by the scan's FULL file path, not the basename:
-            # a partitioned write reuses one task's part-file name across
-            # every partition directory, so basenames are ambiguous
-            scan = self.spark.read.option("mergeSchema", "true").parquet(
-                *[fsio.join(self.path, f) for f in new_files]
-            ).select(
-                F.col("_metadata.file_path").alias("__fp"),
-                "_hoodie_record_key",
-            )
-            wanted = set(new_files)
-            root_path = fsio.uri_path(self.path)
-            for uri, b64 in build_file_blooms(scan, file_col="__fp").items():
-                local = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
-                rel = os.path.relpath(local, root_path)
-                if rel in wanted:
-                    key_blooms[rel] = b64
         column_blooms: dict[str, dict[str, str]] = {}
-        if self.bloom_columns and new_files:
+        cols = (["_hoodie_record_key"] if self.bloom_index else []) + list(
+            self.bloom_columns
+        )
+        if cols and new_files:
             from hudi_and_delta_showcase_spark.tables.bloom import (
                 build_file_blooms,
             )
 
             wanted = set(new_files)
             root_path = fsio.uri_path(self.path)
-            for col in self.bloom_columns:
+            for col in cols:
+                # blooms by the scan's FULL file path, not the basename:
+                # a partitioned write reuses one task's part-file name
+                # across every partition directory
                 scan = self.spark.read.option("mergeSchema", "true").parquet(
                     *[fsio.join(self.path, f) for f in new_files]
                 ).select(F.col("_metadata.file_path").alias("__fp"), col)
-                # xxhash64 is TYPE-dependent, so each bloom records the
-                # hashed type beside the bitmap; the probe replays the
+                # xxhash64 is TYPE-dependent, so each column bloom records
+                # the hashed type beside the bitmap; the probe replays the
                 # literal under each recorded type — blooms stay valid
                 # across type-widening evolution (legacy narrow files
                 # keep narrow-typed blooms, new wide files get wide ones)
@@ -3007,7 +2899,11 @@ class LakehouseTable:
                         urllib.parse.urlparse(uri).path
                     )
                     rel = os.path.relpath(local, root_path)
-                    if rel in wanted:
+                    if rel not in wanted:
+                        continue
+                    if col == "_hoodie_record_key":
+                        key_blooms[rel] = b64
+                    else:
                         column_blooms.setdefault(rel, {})[col] = [t_str, b64]
         return {
             "key_ranges": key_ranges,
@@ -3036,12 +2932,10 @@ class LakehouseTable:
         ``counts_out`` (if given) receives each readable file's EXACT
         footer row count — the same single footer open feeds both
         indexes, so metadata-only COUNT(*) costs no extra IO."""
-        import datetime as _dt
-
         import pyarrow.parquet as pq
 
         out: dict[str, dict[str, list]] = {}
-        ok = (str, int, float, bool, _dt.date)  # datetime is a date
+        ok = (str, int, float, bool, datetime.date)  # datetime is a date
         for rel in rel_files:
             src = fsio.resolve(self.path, rel)
             try:
@@ -3084,19 +2978,19 @@ class LakehouseTable:
                     maxs.append(st.max)
                 if mins:
                     lo, hi = min(mins), max(maxs)
-                    if isinstance(lo, _dt.datetime):
+                    if isinstance(lo, datetime.datetime):
                         # naive UTC before serializing: aware bounds
                         # would re-parse aware and never compare
                         # against the engine's naive literals
                         if lo.tzinfo is not None:
                             lo = lo.astimezone(
-                                _dt.timezone.utc
+                                datetime.timezone.utc
                             ).replace(tzinfo=None)
                             hi = hi.astimezone(
-                                _dt.timezone.utc
+                                datetime.timezone.utc
                             ).replace(tzinfo=None)
                         lo, hi = lo.isoformat(), hi.isoformat()
-                    elif isinstance(lo, _dt.date):
+                    elif isinstance(lo, datetime.date):
                         lo, hi = lo.isoformat(), hi.isoformat()
                     per_col[col] = [lo, hi]
             if per_col:
@@ -4039,14 +3933,7 @@ def maintenance_plan(
     plan: dict = {"compact": False, "cluster": None, "vacuum": False}
     if table.table_type == MERGE_ON_READ and len(prev.log_files) >= max_log_files:
         plan["compact"] = True
-    # latest clustering spec (linear or z-order) + its covered files
-    spec_key, spec, clustered = None, None, set()
-    for c in table.history():
-        for k in ("cluster_spec", "zorder_spec"):
-            if c.action == "optimize" and c.stats.get(k):
-                spec_key, spec = k, c.stats[k]
-        if c.action == "optimize" and c.stats.get("clustered_output"):
-            clustered |= set(c.stats["clustered_output"])
+    spec_key, spec, clustered, _ = table._clustering()
     if spec and prev.files:
         stale = [f for f in prev.files if f not in clustered]
         if len(stale) / len(prev.files) > max_unclustered_fraction:

@@ -4,6 +4,8 @@ pure arithmetic, no probe scan of table data."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -143,8 +145,9 @@ def test_bucket_disjoint_writers_commute_same_bucket_conflicts():
 
 
 def test_scoped_optimize_respects_bucket_layout(spark, tmp_path):
-    """OPTIMIZE ... WHERE on a bucket-indexed partitioned table must
-    align tasks to buckets like full optimize() does — otherwise the
+    """OPTIMIZE ... WHERE (and an incremental restack) on a
+    bucket-indexed partitioned table must align tasks to buckets like
+    full optimize() does — otherwise the
     write's partitionBy(__bk) fans each task across every bucket dir
     (tasks x buckets files), defeating target_files (ADVICE r6)."""
     base = spark.createDataFrame(
@@ -178,3 +181,14 @@ def test_scoped_optimize_respects_bucket_layout(spark, tmp_path):
     assert got == {(1, 111), (3, 333)} | {
         (i, i * 10) for i in range(2, 41) if i != 3
     }
+    # an incremental restack (no clustering generation yet, so every
+    # file is stale) aligns to buckets too: 3 range tasks split a
+    # partition, yet one new file per (partition, bucket), rows unchanged
+    inc = t.optimize(target_files=3, cluster_by=["k"], incremental=True)
+    cells = Counter(
+        (t._partition_value_of(f), t._bucket_of(f))
+        for f in inc.files
+        if f not in c.files
+    )
+    assert max(cells.values()) == 1, "more than one file per bucket"
+    assert {(r.k, r.v) for r in t.read().select("k", "v").collect()} == got

@@ -5,12 +5,15 @@ before the `_rt` merge."""
 
 from __future__ import annotations
 
+import datetime
+
 from hudi_and_delta_showcase_spark.tables import LakehouseTable
 
 
 def test_lookup_keys_encode_like_the_writers_record_key(spark, tmp_path):
     """The writer's ``concat_ws("|", cast(part as string))`` skips null
-    parts and prints booleans as true/false; a lookup must build the
+    parts, prints booleans as true/false, doubles like Java and
+    timestamps without trailing fraction zeros; a lookup must build the
     same string. Record-key strings still pass through."""
     comp = LakehouseTable.create(
         spark, str(tmp_path / "comp"),
@@ -30,6 +33,34 @@ def test_lookup_keys_encode_like_the_writers_record_key(spark, tmp_path):
     )
     assert [r.v for r in flag.read_for_keys([True]).collect()] == ["t"]
     assert [r.v for r in flag.read_for_keys(["false"]).collect()] == ["f"]
+    # doubles print as Java's Double.toString (1.0E20, not 1e+20) and
+    # timestamps drop the fraction's trailing zeros (.5, not .500000)
+    doubles = [1e20, 12345678.0, 1e-4, 2e23, float("nan"), float("inf")]
+    dbl = LakehouseTable.create(
+        spark, str(tmp_path / "dbl"),
+        spark.createDataFrame(
+            list(zip(doubles, range(6))), "d double, i int"
+        ).coalesce(1),
+        key_cols=["d"],
+    )
+    assert sorted(r.i for r in dbl.read_for_keys(doubles).collect()) == [
+        0, 1, 2, 3, 4, 5
+    ]
+    stamps = [
+        datetime.datetime(2024, 1, 1, 0, 0, 0, 500000),
+        datetime.datetime(2024, 1, 1, 0, 0, 1),
+        datetime.datetime(2024, 1, 1, 0, 0, 2, 123456),
+    ]
+    ntz = LakehouseTable.create(
+        spark, str(tmp_path / "ntz"),
+        spark.createDataFrame(
+            list(zip(stamps, range(3))), "t timestamp_ntz, i int"
+        ).coalesce(1),
+        key_cols=["t"],
+    )
+    assert sorted(r.i for r in ntz.read_for_keys(stamps).collect()) == [
+        0, 1, 2
+    ]
 
 
 def test_mor_lookup_with_outstanding_logs_prunes_base_files(spark, tmp_path):
