@@ -586,13 +586,16 @@ def create_lsh_index(spark, path: str):
     """Create the empty persisted band index behind
     ``incremental_lsh_dedup``: a MERGE-ON-READ lakehouse table keyed on
     ``(band, band_key)`` holding the smallest document id seen per LSH
-    bucket. MoR because a batch's band keys are md5-uniform — they
-    touch EVERY region of the key space, so a CoW upsert would rewrite
-    the whole index each sync; the MoR upsert appends O(batch) log
-    rows instead (later commit wins per key — correct, the writer
-    folds min(old, new) before writing) and periodic ``compact()``
-    amortizes the merge. This is the same economics that puts Hudi's
-    own metadata table on MoR."""
+    bucket. It has no bucket layout: a batch probes it with one
+    semi-join of its ``_rt`` view against the batch's bucket keys, so
+    every probe scans the whole index and ships only the touched
+    buckets to the driver. MoR because a batch's band keys are
+    md5-uniform — they touch EVERY region of the key space, so a CoW
+    upsert would rewrite the whole index each sync; the MoR upsert
+    appends one log file of O(batch) rows instead (later commit wins
+    per key — correct, the writer folds min(old, new) before writing)
+    and periodic ``compact()`` amortizes the merge. This is the same
+    economics that puts Hudi's own metadata table on MoR."""
     from hudi_and_delta_showcase_spark.tables import LakehouseTable
 
     empty = spark.createDataFrame(
@@ -615,9 +618,9 @@ def incremental_lsh_dedup(
     hash_fn: str = "md5",
 ) -> DataFrame:
     """Incremental corpus dedup against a PERSISTED LSH band index:
-    process one arriving batch in O(batch + touched index buckets)
-    instead of re-running LSH over the whole corpus — the only dedup
-    shape that survives a continuously-growing 100 TB corpus.
+    process one arriving batch against the index instead of re-running
+    LSH over the whole corpus — the only dedup shape that survives a
+    continuously-growing 100 TB corpus.
 
     Rule (exact, order-independent within the stream): a document is
     ``dropped`` iff it shares >=1 LSH band bucket with ANY
@@ -632,54 +635,81 @@ def incremental_lsh_dedup(
     doc but cannot retract an already-emitted verdict — same contract
     as any streaming dedup).
 
-    Scale shape: banding is map-side; the index lookup is one shuffle
-    join on (band, band_key) against a bucket-indexed table; the
-    verdict is batch-sized and localCheckpointed so the returned frame
-    is frozen BEFORE the index advances. Returns
-    ``(<id_col>, status, dup_of)``."""
-    bh = band_hashes(sigs, id_col, bands, hash_fn).localCheckpoint(
-        eager=False
+    Shape: table-sized work stays in Spark, batch-sized work runs in
+    Arrow on the driver. The batch's band rows (batch x bands) are
+    collected once; the index is probed once — its ``_rt`` view
+    left-semi-joined to the broadcast bucket keys of the batch, so the
+    scan is O(index) but only touched buckets come back. The per-bucket
+    batch minima, the verdict and the min(old, new) fold are
+    ``pyarrow.compute`` over O(batch x bands) rows, and the fold is
+    upserted as one single-partition frame (one index log file per
+    batch). The verdict is a driver-built frame, so it is frozen BEFORE
+    the index advances. Returns ``(<id_col> long, status, dup_of
+    long)``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spark = sigs.sparkSession
+    # pinned so that an empty batch or an empty index keeps its types
+    band_rows = pa.schema(
+        [("doc", pa.int64()), ("band", pa.int32()), ("band_key", pa.string())]
     )
-    idx = index.read().select(
-        "band", "band_key", F.col("min_doc_id").alias("__idx_min")
+    index_rows = pa.schema(
+        [("band", pa.int32()), ("band_key", pa.string()),
+         ("min_doc_id", pa.int64())]
     )
-    intra = bh.groupBy("band", "band_key").agg(
-        F.min("doc").alias("__batch_min")
+    keys = ["band", "band_key"]
+    bh = band_hashes(sigs, id_col, bands, hash_fn).toArrow().cast(band_rows)
+    batch_min = bh.group_by(keys).aggregate([("doc", "min")])
+    probe = spark.createDataFrame(
+        batch_min.select(keys), "band int, band_key string"
     )
-    joined = (
-        bh.join(intra, ["band", "band_key"])
-        .join(idx, ["band", "band_key"], "left")
+    hits = (
+        index.read()
+        .join(F.broadcast(probe), keys, "left_semi")
+        .select(*index_rows.names)
+        .toArrow()
+        .cast(index_rows)
+        .rename_columns(keys + ["idx_min"])
     )
-    earlier = F.least(
-        F.when(F.col("__idx_min") < F.col("doc"), F.col("__idx_min")),
-        F.when(F.col("__batch_min") < F.col("doc"), F.col("__batch_min")),
+    buckets = batch_min.join(hits, keys, join_type="left outer")
+    rows = bh.join(buckets, keys)
+    doc, none = rows["doc"], pa.scalar(None, pa.int64())
+    earlier = pc.min_element_wise(
+        pc.if_else(pc.less(rows["idx_min"], doc), rows["idx_min"], none),
+        pc.if_else(pc.less(rows["doc_min"], doc), rows["doc_min"], none),
     )
-    verdict = (
-        joined.groupBy(F.col("doc").alias(id_col))
-        .agg(F.min(earlier).alias("dup_of"))
-        .select(
-            id_col,
-            F.when(F.col("dup_of").isNull(), F.lit("kept"))
-            .otherwise(F.lit("dropped"))
-            .alias("status"),
-            "dup_of",
-        )
-        .localCheckpoint(eager=True)  # freeze vs the index upsert below
+    dup_of = (
+        pa.table({"doc": doc, "earlier": earlier})
+        .group_by("doc")
+        .aggregate([("earlier", "min")])
     )
+    verdict = pa.table({
+        id_col: dup_of["doc"],
+        "status": pc.if_else(
+            pc.is_null(dup_of["earlier_min"]), "kept", "dropped"
+        ),
+        "dup_of": dup_of["earlier_min"],
+    })
     # fold this batch's minima into the index: upserts REPLACE stored
     # rows (commit order wins), so merge min(old, new) here, not via
     # precombine
-    index.upsert(
-        intra.join(idx, ["band", "band_key"], "left").select(
-            "band",
-            "band_key",
-            F.least(
-                F.col("__batch_min"),
-                F.coalesce(F.col("__idx_min"), F.col("__batch_min")),
-            ).alias("min_doc_id"),
+    fold = pa.table({
+        "band": buckets["band"],
+        "band_key": buckets["band_key"],
+        "min_doc_id": pc.min_element_wise(
+            buckets["doc_min"], buckets["idx_min"]
+        ),
+    })
+    if fold.num_rows:
+        index.upsert(
+            spark.createDataFrame(
+                fold, "band int, band_key string, min_doc_id long"
+            ).coalesce(1)
         )
+    return spark.createDataFrame(
+        verdict, f"{id_col} long, status string, dup_of long"
     )
-    return verdict
 
 
 def simhash(

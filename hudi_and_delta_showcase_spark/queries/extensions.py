@@ -269,11 +269,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus dedup against a PERSISTED LSH band index: the
     corpus arrives as two batches (split at the median id); each batch
-    is deduped in O(batch + touched buckets) against a merge-on-read
-    lakehouse table holding min(doc_id) per LSH bucket, then folds its
-    banding back in with one keyed upsert — the shape that keeps dedup
-    O(arrivals) on a continuously-growing 100 TB corpus instead of
-    re-running LSH over everything. The oracle computes the SAME
+    is deduped with one probe of a merge-on-read lakehouse table
+    holding min(doc_id) per LSH bucket (an index scan that returns only
+    the batch's buckets) and batch-sized Arrow work on the driver, then
+    folds its banding back in with one keyed upsert — the shape that
+    keeps dedup off the corpus on a continuously-growing 100 TB corpus
+    instead of re-running LSH over everything. The oracle computes the SAME
     verdict one-shot in SQL (dropped iff any smaller-id doc shares a
     band bucket), which the incremental fold provably equals for
     ordered batches."""

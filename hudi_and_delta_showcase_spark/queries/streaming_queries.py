@@ -559,10 +559,11 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING corpus dedup against the persisted LSH band index
     (late r7) — the continuous-ingest shape of dedup_incremental_index:
     documents arrive as a file stream (one range-ordered file per
-    micro-batch), each batch shingles/minhashes ITS OWN rows, consults
-    the MoR band index in O(batch + touched buckets), emits verdicts,
-    and folds its band minima back in with one keyed upsert inside
-    foreachBatch. Three micro-batches must reproduce the one-shot
+    micro-batch), each batch shingles/minhashes ITS OWN rows, probes
+    the MoR band index once (an index scan that returns only the
+    batch's buckets), computes its verdicts and band minima in Arrow on
+    the driver, and folds the minima back in with one keyed upsert
+    inside foreachBatch. Three micro-batches must reproduce the one-shot
     oracle verdict for the whole corpus — exactly the property the
     incremental fold guarantees for id-ordered arrivals. At 100 TB
     this is THE dedup ingest loop: work per trigger scales with the
@@ -603,7 +604,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sigs = D.minhash_signatures(
             sh, "doc_id", "shingles", num_hashes=16, hash_fn="md5"
         )
-        v = D.incremental_lsh_dedup(idx, sigs, "doc_id").localCheckpoint()
+        v = D.incremental_lsh_dedup(idx, sigs, "doc_id")
         state["verdicts"] = (
             v
             if state["verdicts"] is None

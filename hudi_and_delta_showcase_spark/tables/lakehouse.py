@@ -2171,12 +2171,19 @@ class LakehouseTable:
         incremental: bool = False,
         where_partition=None,
     ) -> mf.Commit:
-        """D8 OPTIMIZE: compact small files into ~target_files per
-        partition (the reference's file-compaction maintenance,
-        README.md:1240). ``cluster_by`` additionally sorts rows within
-        files (linear clustering): parquet row-group min/max stats on
-        the clustered columns become selective, so point/range scans on
-        them skip most of the table. ``zorder_by`` instead interleaves
+        """D8 OPTIMIZE: compact small files (the reference's
+        file-compaction maintenance, README.md:1240). Unclustered, a
+        rewrite spanning several partitions is hashed by whole
+        partition value into ``target_files`` tasks, so it writes one
+        file per partition value whatever ``target_files`` is; a
+        single-partition or unpartitioned rewrite coalesces into at
+        most ``target_files`` files. Clustered (``cluster_by`` or
+        ``zorder_by``), the rows are range-partitioned into about
+        ``target_files`` files in total, not per partition.
+        ``cluster_by`` additionally sorts rows within files (linear
+        clustering): parquet row-group min/max stats on the clustered
+        columns become selective, so point/range scans on them skip
+        most of the table. ``zorder_by`` instead interleaves
         MULTIPLE numeric dimensions (Delta ``ZORDER BY``): each column
         is quantile-bucketed (driver-side ``approxQuantile`` — bounded
         Greenwald-Khanna sketch, the same sampling family the range

@@ -14,7 +14,10 @@ directions and bounds from ``HEAD_TREE/BENCHMARK.json``.
 It prints every pair's values and steal, then for each metric: each
 side's median and quartiles, how many pairs the head won, and whether
 the median gap exceeds the base's interquartile range and the
-metric's bound. It exits non-zero if any run failed a check or
+metric's bound, and whether a gain claim is met: the head wins at
+least 9 of every 10 pairs (ties count for neither side) and its
+median is better than the base's by more than the base's
+interquartile range. It exits non-zero if any run failed a check or
 produced no result.
 """
 
@@ -119,6 +122,10 @@ def main(argv=None) -> int:
         # positive = head worse than base
         worse = (hmed - bmed) if lower else (bmed - hmed)
         rel = worse / bmed if bmed else 0.0
+        # a gain claim holds when the head wins >= 9 of every 10 pairs
+        # (ties count for neither side) and the median gap, in the
+        # better direction, exceeds the base IQR
+        claim = 10 * wins >= 9 * len(pairs) and -worse > bq3 - bq1
         print(
             f"  {name}: base {bmed:.4g} [{bq1:.4g}, {bq3:.4g}] -> head "
             f"{hmed:.4g} [{hq1:.4g}, {hq3:.4g}] "
@@ -128,6 +135,7 @@ def main(argv=None) -> int:
             f"{bq3 - bq1:.4g}; "
             + (f"WORSE beyond bound {m['bound']}" if rel > m["bound"]
                else f"within bound {m['bound']}")
+            + f"; gain claim {'MET' if claim else 'not met'}"
         )
     failed = [
         (side, seed)

@@ -516,6 +516,16 @@ def test_bm25_ranks_matching_docs(spark):
 # ---------------------------------------------------------------------------
 
 
+def _jobs_of(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _one_shot_verdicts(bh):
     a, b = bh.alias("a"), bh.alias("b")
     coll = (
@@ -542,12 +552,27 @@ def test_incremental_lsh_equals_one_shot_three_batches(
     idx = D.create_lsh_index(spark, str(tmp_path / "idx"))
     parts = [
         sigs.filter(F.col("doc_id") <= cuts[0]),
+        # an empty batch (every doc filtered out) between two others
+        sigs.filter(F.col("doc_id") < 0),
         sigs.filter(
             (F.col("doc_id") > cuts[0]) & (F.col("doc_id") <= cuts[1])
         ),
         sigs.filter(F.col("doc_id") > cuts[1]),
     ]
-    outs = [D.incremental_lsh_dedup(idx, p, "doc_id") for p in parts]
+    outs = []
+    for i, p in enumerate(parts):
+        out, jobs = _jobs_of(
+            spark, f"lsh-batch-{i}",
+            lambda p=p: D.incremental_lsh_dedup(idx, p, "doc_id"),
+        )
+        outs.append(out)
+        if i >= 2:
+            # one band collect, one index probe, one log write
+            assert jobs <= 5, f"batch {i} ran {jobs} Spark jobs"
+            assert idx.history()[-1].stats["log_files_added"] == 1
+    empty = outs[1]
+    assert empty.columns == ["doc_id", "status", "dup_of"]
+    assert empty.count() == 0
     # compacting the MoR index mid-stream must not change verdicts
     idx.compact()
     got = {
