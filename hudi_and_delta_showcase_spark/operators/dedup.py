@@ -643,9 +643,9 @@ def incremental_lsh_dedup(
     batch minima, the verdict and the min(old, new) fold are
     ``pyarrow.compute`` over O(batch x bands) rows, and the fold is
     upserted as one single-partition frame (one index log file per
-    batch). The verdict is a driver-built frame, so it is frozen BEFORE
-    the index advances. Returns ``(<id_col> long, status, dup_of
-    long)``."""
+    batch; an empty batch writes none). The verdict is a driver-built
+    frame, so it is frozen BEFORE the index advances. Returns
+    ``(<id_col> long, status, dup_of long)``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
