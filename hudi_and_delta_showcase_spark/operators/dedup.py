@@ -24,10 +24,12 @@ from pyspark.sql import DataFrame, Window
 
 
 def tokenize(df: DataFrame, text_col: str, out: str = "tokens") -> DataFrame:
-    """Whitespace tokenization, lowercased, empties removed."""
+    """Whitespace tokenization, lowercased, empties removed. Given in
+    SQL text, like the rest of the signing pipeline: one parse, where
+    the Column-API lambda cost a py4j round trip per node. The SQL
+    literal escapes its backslash: ``'\\\\s+'`` is the regex ``\\s+``."""
     return df.withColumn(
-        out,
-        F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""),
+        out, F.expr(rf"filter(split(lower({text_col}), '\\s+'), t -> t != '')")
     )
 
 
@@ -105,22 +107,16 @@ def minhash_signatures(
             f"array_min(transform(__hp, p -> p.h1 + {i} * p.h2))"
             for i in range(num_hashes)
         )
-        return (
-            df.withColumn("__hp", F.expr(pair))
-            .withColumn("minhash", F.expr(f"array({mins})"))
-            .select(id_col, "minhash")
+        # two projections: the md5 pairs are computed once per shingle,
+        # not once per hash function
+        return df.selectExpr(id_col, f"{pair} as __hp").selectExpr(
+            id_col, f"array({mins}) as minhash"
         )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    F.col(shingles_col), lambda s: F.xxhash64(s, F.lit(i))
-                )
-            )
-            for i in range(num_hashes)
-        ]
+    mins = ", ".join(
+        f"array_min(transform({shingles_col}, s -> xxhash64(s, {i})))"
+        for i in range(num_hashes)
     )
-    return df.withColumn("minhash", sig).select(id_col, "minhash")
+    return df.selectExpr(id_col, f"array({mins}) as minhash")
 
 
 def band_hashes(
@@ -134,56 +130,22 @@ def band_hashes(
     The signature length must be divisible by ``bands`` — trailing
     hashes would otherwise be silently ignored, quietly lowering
     recall (enforced per-row below)."""
-    sig = F.col("minhash")
-    n = F.size(sig)
-    rows_per_band = (n / bands).cast("int")
-    sigs = sigs.withColumn(
-        "minhash",
-        F.when(
-            F.size(sig) % bands == 0, sig
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(f"signature length not divisible by bands={bands}: "),
-                    F.size(sig).cast("string"),
-                )
-            )
-        ),
+    sig = (
+        f"case when size(minhash) % {bands} = 0 then minhash "
+        f"else raise_error(concat('signature length not divisible by "
+        f"bands={bands}: ', cast(size(minhash) as string))) end"
     )
-    band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
-    banded = sigs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(
-            F.transform(
-                band_idx,
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.slice(
-                                sig.cast("array<string>"),
-                                b * rows_per_band + 1,
-                                rows_per_band,
-                            ),
-                        )
-                    ).alias("band_key")
-                    if hash_fn == "md5"
-                    else F.xxhash64(
-                        F.concat_ws(
-                            "|",
-                            F.slice(
-                                sig.cast("array<string>"),
-                                b * rows_per_band + 1,
-                                rows_per_band,
-                            ),
-                        )
-                    ).cast("string").alias("band_key"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc", "bk.band", "bk.band_key")
-    return banded
+    rows = f"cast(size({sig}) / {bands} as int)"
+    part = f"concat_ws('|', slice(cast({sig} as array<string>), b * {rows} + 1, {rows}))"
+    key = (
+        f"md5({part})" if hash_fn == "md5"
+        else f"cast(xxhash64({part}) as string)"
+    )
+    return sigs.selectExpr(
+        f"{id_col} as doc",
+        f"inline(transform(sequence(0, {bands - 1}), "
+        f"b -> named_struct('band', b, 'band_key', {key})))",
+    )
 
 
 def lsh_candidate_pairs(
@@ -586,10 +548,12 @@ def create_lsh_index(spark, path: str):
     """Create the empty persisted band index behind
     ``incremental_lsh_dedup``: a MERGE-ON-READ lakehouse table keyed on
     ``(band, band_key)`` holding the smallest document id seen per LSH
-    bucket. It has no bucket layout: a batch probes it with one
-    semi-join of its ``_rt`` view against the batch's bucket keys, so
-    every probe scans the whole index and ships only the touched
-    buckets to the driver. MoR because a batch's band keys are
+    bucket. It has no bucket layout: a batch probes it through
+    ``LakehouseTable._latest_rows`` — every base and log file scanned in
+    one job, the batch's bucket keys broadcast-semi-joined below the
+    ``_rt`` merge, nothing shuffled — and only the touched buckets'
+    rows (one per outstanding version) reach the driver, where the
+    merge runs in Arrow. MoR because a batch's band keys are
     md5-uniform — they touch EVERY region of the key space, so a CoW
     upsert would rewrite the whole index each sync; the MoR upsert
     appends one log file of O(batch) rows instead (later commit wins
@@ -637,15 +601,20 @@ def incremental_lsh_dedup(
 
     Shape: table-sized work stays in Spark, batch-sized work runs in
     Arrow on the driver. The batch's band rows (batch x bands) are
-    collected once; the index is probed once — its ``_rt`` view
-    left-semi-joined to the broadcast bucket keys of the batch, so the
-    scan is O(index) but only touched buckets come back. The per-bucket
-    batch minima, the verdict and the min(old, new) fold are
-    ``pyarrow.compute`` over O(batch x bands) rows, and the fold is
-    upserted as one single-partition frame (one index log file per
-    batch; an empty batch writes none). The verdict is a driver-built
-    frame, so it is frozen BEFORE the index advances. Returns
-    ``(<id_col> long, status, dup_of long)``."""
+    collected once; an empty batch returns its empty verdict right
+    there, with no probe and no index write. The index is probed once
+    through ``index._latest_rows``: one scan of every index file with
+    the batch's bucket keys broadcast-semi-joined below the ``_rt``
+    merge — O(index) read, nothing shuffled — and the latest row per
+    touched bucket resolved in Arrow over O(batch x bands x (1 +
+    outstanding logs)) rows. The per-bucket batch minima, the verdict
+    and the min(old, new) fold are ``pyarrow.compute`` over O(batch x
+    bands) rows, and the fold is upserted as one single-partition
+    frame (one index log file per batch). Four Spark jobs per batch:
+    the band collect, the probe's key broadcast and scan, and the log
+    write. The verdict is a driver-built frame, so it is frozen BEFORE
+    the index advances. Returns ``(<id_col> long, status, dup_of
+    long)``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -658,17 +627,17 @@ def incremental_lsh_dedup(
         [("band", pa.int32()), ("band_key", pa.string()),
          ("min_doc_id", pa.int64())]
     )
+    verdict_ddl = f"{id_col} long, status string, dup_of long"
     keys = ["band", "band_key"]
     bh = band_hashes(sigs, id_col, bands, hash_fn).toArrow().cast(band_rows)
+    if not bh.num_rows:
+        return spark.createDataFrame([], verdict_ddl)
     batch_min = bh.group_by(keys).aggregate([("doc", "min")])
     probe = spark.createDataFrame(
         batch_min.select(keys), "band int, band_key string"
     )
     hits = (
-        index.read()
-        .join(F.broadcast(probe), keys, "left_semi")
-        .select(*index_rows.names)
-        .toArrow()
+        index._latest_rows(probe, index_rows.names)
         .cast(index_rows)
         .rename_columns(keys + ["idx_min"])
     )
@@ -701,15 +670,12 @@ def incremental_lsh_dedup(
             buckets["doc_min"], buckets["idx_min"]
         ),
     })
-    if fold.num_rows:
-        index.upsert(
-            spark.createDataFrame(
-                fold, "band int, band_key string, min_doc_id long"
-            ).coalesce(1)
-        )
-    return spark.createDataFrame(
-        verdict, f"{id_col} long, status string, dup_of long"
+    index.upsert(
+        spark.createDataFrame(
+            fold, "band int, band_key string, min_doc_id long"
+        ).coalesce(1)
     )
+    return spark.createDataFrame(verdict, verdict_ddl)
 
 
 def simhash(

@@ -39,27 +39,27 @@ def quality_scores(
     map-only feature operators (this, ``lang_id``, ``fingerprint``)
     then CHAIN over one scan instead of being join-reassembled on the
     id (r13 opt: the composed curation pipeline dropped 3 scans and
-    3 shuffled joins this way)."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "), lambda t: t != "")
-    n_tokens = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    n_punct = F.length(F.regexp_replace(F.col(text_col), "[A-Za-z0-9 ]", ""))
-    avg_tok = F.when(
-        n_tokens > 0,
-        F.aggregate(
-            F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
-        )
-        / n_tokens,
+    3 shuffled joins this way).
+
+    The projection is SQL text, parsed once: the Column-API form cost
+    ~300 py4j round trips per call, one per Column node and lambda."""
+    toks = f"filter(split(lower({text_col}), ' '), t -> t != '')"
+    n_tokens = f"size({toks})"
+    stop_arr = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
+    n_stop = f"size(filter({toks}, t -> array_contains({stop_arr}, t)))"
+    n_punct = f"length(regexp_replace({text_col}, '[A-Za-z0-9 ]', ''))"
+    avg_tok = (
+        f"case when {n_tokens} > 0 then aggregate(transform({toks}, "
+        f"t -> length(t)), 0, (a, x) -> a + x) / {n_tokens} end"
     )
-    return df.select(
-        F.col(id_col),
-        F.length(text_col).alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        avg_tok.alias("avg_token_len"),
-        (n_stop / n_tokens).alias("stopword_ratio"),
-        (n_punct / F.length(text_col)).alias("punct_ratio"),
-        *[F.col(c) for c in keep],
+    return df.selectExpr(
+        id_col,
+        f"length({text_col}) as n_chars",
+        f"{n_tokens} as n_tokens",
+        f"{avg_tok} as avg_token_len",
+        f"{n_stop} / {n_tokens} as stopword_ratio",
+        f"{n_punct} / length({text_col}) as punct_ratio",
+        *keep,
     )
 
 

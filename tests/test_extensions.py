@@ -566,9 +566,12 @@ def test_incremental_lsh_equals_one_shot_three_batches(
             lambda p=p: D.incremental_lsh_dedup(idx, p, "doc_id"),
         )
         outs.append(out)
+        if i == 1:
+            # the band collect only: no index probe, no log write
+            assert jobs <= 1, f"empty batch ran {jobs} Spark jobs"
         if i >= 2:
-            # one band collect, one index probe, one log write
-            assert jobs <= 5, f"batch {i} ran {jobs} Spark jobs"
+            # band collect, probe key broadcast, probe scan, log write
+            assert jobs <= 4, f"batch {i} ran {jobs} Spark jobs"
             assert idx.history()[-1].stats["log_files_added"] == 1
     empty = outs[1]
     assert empty.columns == ["doc_id", "status", "dup_of"]
@@ -590,6 +593,14 @@ def test_incremental_lsh_equals_one_shot_three_batches(
         for r in sigs.select("doc_id").collect()
     }
     assert got == want
+
+
+def test_band_hashes_rejects_signature_not_divisible_by_bands(spark):
+    sigs = spark.createDataFrame(
+        [(1, list(range(16)))], "doc_id long, minhash array<bigint>"
+    )
+    with pytest.raises(Exception, match="not divisible by bands=5"):
+        D.band_hashes(sigs, "doc_id", 5).collect()
 
 
 def test_incremental_lsh_verdict_frozen_before_index_advances(

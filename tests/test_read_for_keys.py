@@ -1,11 +1,14 @@
 """Point lookups (``read_for_keys``) pick their files with the writers'
 planner: lookup keys encode exactly like the stamped record key, and
 MoR tables with outstanding logs prune their base files by key range
-before the `_rt` merge."""
+before the `_rt` merge. The keyed probe behind incremental LSH dedup
+(``_latest_rows``) serves what ``read()`` would."""
 
 from __future__ import annotations
 
 import datetime
+
+import pytest
 
 from hudi_and_delta_showcase_spark.tables import LakehouseTable
 
@@ -106,3 +109,47 @@ def test_mor_lookup_of_log_only_and_missing_keys(spark, tmp_path):
     # a predicate read whose stats prune every base file merges the same way
     got = t.read_matching([("v", "=", 90)]).collect()
     assert [(r.k, r.v) for r in got] == [(9, 90)]
+
+
+def test_latest_rows_equals_read_semi_joined_to_the_keys(spark, tmp_path):
+    """``_latest_rows`` semi-joins the keys below the `_rt` merge and
+    merges in Arrow: it must serve exactly ``read()`` semi-joined to the
+    same keys. Key 1 sits in the base and in both logs, and the later
+    log wins with an OLDER precombine value; key 2 is log-only, key 99
+    is held nowhere; then the same after a compaction left no log."""
+    schema = "k int, sq int, tb string, v string"
+    t = LakehouseTable.create(
+        spark, str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(k, 5, "a", f"base{k}") for k in (1, 3, 4)], schema
+        ).coalesce(1),
+        key_cols=["k"], precombine="sq", tiebreakers=["tb"],
+        table_type="mor",
+    )
+    t.upsert(spark.createDataFrame(
+        [(1, 9, "b", "log1"), (2, 1, "a", "log1"), (2, 1, "b", "log1b")],
+        schema,
+    ))
+    t.upsert(spark.createDataFrame([(1, 3, "a", "log2")], schema))
+    keys = spark.createDataFrame([(1,), (2,), (3,), (99,)], "k int")
+    cols = ["k", "v", "sq"]
+
+    def both():
+        got = t._latest_rows(keys, cols)
+        assert got.column_names == cols
+        want = t.read().join(keys, "k", "left_semi").select(*cols)
+        return (
+            sorted(zip(*[got[c].to_pylist() for c in cols])),
+            sorted(tuple(r) for r in want.collect()),
+        )
+
+    assert len(t._commit(None).log_files) == 2
+    got, want = both()
+    assert got == want == [(1, "log2", 3), (2, "log1b", 1), (3, "base3", 5)]
+    t.compact()
+    assert not t._commit(None).log_files
+    got, want = both()
+    assert got == want
+    # a semi-join on a non-key column could keep a stale row of a key
+    with pytest.raises(ValueError, match="not resolution columns"):
+        t._latest_rows(spark.createDataFrame([("log2",)], "v string"), cols)
