@@ -25,10 +25,24 @@ partitions before this operator runs (see tables/cow.py).
 
 from __future__ import annotations
 
+import functools
+import operator
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from hudi_and_delta_showcase_spark.operators.cdc import precombine_dedup
+
+
+def key_match(cols: list[str], left: str = "t", right: str = "s") -> Column:
+    """Null-safe equality of ``cols`` between the ``left`` and ``right``
+    aliases: a null key must MATCH a null key (plain ``=`` never
+    matches null, so a null-keyed old row would escape an anti-join
+    and duplicate its key)."""
+    return functools.reduce(
+        operator.and_,
+        (F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols),
+    )
 
 
 def upsert(
@@ -50,13 +64,9 @@ def upsert(
     source_keys = source.select(*key_cols).distinct().alias("s")
     if auto_broadcast:
         source_keys = F.broadcast(source_keys)
-    # null-safe key equality: a null key in source must still replace the
-    # matching null-keyed target row (plain `=` would duplicate it)
-    cond = None
-    for c in key_cols:
-        e = F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-        cond = e if cond is None else cond & e
-    kept = target.alias("t").join(source_keys, cond, "left_anti")
+    kept = target.alias("t").join(
+        source_keys, key_match(key_cols), "left_anti"
+    )
     merged = kept.unionByName(source, allowMissingColumns=True)
 
     if hard_delete_col is not None:

@@ -2488,7 +2488,7 @@ def _export_partition_info(table) -> tuple[list[str], object]:
             table._partition_spec_value_of(f)[0] != cur for f in live
         ):
             return [], None
-    return [col], table._partition_value_of
+    return [col], lambda f: table._partition_spec_value_of(f)[1]
 
 
 def _add_stats_json(c, f: str) -> str | None:

@@ -1051,7 +1051,7 @@ def export_iceberg_metadata(
                 "file_format": "PARQUET",
                 "partition": {
                     sf["name"]: _typed_partition_value(
-                        table._partition_value_of(f),
+                        table._partition_spec_value_of(f)[1],
                         sf["result-type"],
                     )
                     for sf in spec_fields

@@ -56,6 +56,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hudi_and_delta_showcase_spark.operators.cdc import precombine_dedup
+from hudi_and_delta_showcase_spark.operators.upsert import key_match
 from hudi_and_delta_showcase_spark.tables import fsio
 from hudi_and_delta_showcase_spark.tables import manifest as mf
 
@@ -223,9 +224,9 @@ class LakehouseTable:
 
     def _load_meta(self, meta: dict) -> None:
         self.key_cols: list[str] = meta["key_cols"]
-        self.precombine: str | None = meta["precombine"]
+        self.precombine: str | None = meta.get("precombine")
         self.tiebreakers: list[str] = meta.get("tiebreakers", [])
-        self.partition_by: str | None = meta["partition_by"]
+        self.partition_by: str | None = meta.get("partition_by")
         #: partition-spec HISTORY (Iceberg spec-evolution model): entry i
         #: is the partition column files written under spec i used (None
         #: = unpartitioned). ``partition_by`` is always the LAST entry —
@@ -289,6 +290,111 @@ class LakehouseTable:
     # ------------------------------------------------------------------ #
     # creation / loading
     # ------------------------------------------------------------------ #
+
+    @staticmethod
+    def _unclaimed(
+        path: str, table_type: str = COPY_ON_WRITE, overwrite: bool = False
+    ) -> str:
+        """The absolute root for a new table at ``path``: checks
+        ``table_type`` and refuses an existing table (or clears it when
+        ``overwrite``) — every bootstrap calls this before it reads
+        foreign metadata or writes anything."""
+        if table_type not in (COPY_ON_WRITE, MERGE_ON_READ):
+            raise ValueError(
+                f"table_type must be {COPY_ON_WRITE!r} or "
+                f"{MERGE_ON_READ!r}, got {table_type!r}"
+            )
+        path = fsio.absolutize(path)
+        if fsio.exists(fsio.join(path, "_meta.json")):
+            if not overwrite:
+                raise FileExistsError(f"already a lakehouse table: {path}")
+            fsio.rmtree(path)
+        return path
+
+    @classmethod
+    def _claim(
+        cls, spark: SparkSession, path: str, overwrite: bool = False, **meta
+    ) -> "LakehouseTable":
+        """Claim a new table root (``_unclaimed``) and write its
+        ``_meta.json`` with only the properties given — ``_load_meta``
+        supplies every default. Returns the handle; version 0 follows
+        through ``_publish_v0``."""
+        path = cls._unclaimed(path, meta["table_type"], overwrite)
+        fsio.makedirs(path)
+        fsio.write_atomic(
+            fsio.join(path, "_meta.json"), json.dumps(meta, indent=1)
+        )
+        return cls(spark, path)
+
+    def _publish_v0(
+        self,
+        action: str,
+        files: list[str],
+        stats: dict,
+        seeds: dict | None = None,
+        **fields,
+    ) -> "LakehouseTable":
+        """Publish version 0, derived from the empty table by
+        ``mf.next_commit``. The index entries of ``files`` come from
+        ``_index_fields`` unless ``fields`` carries them; ``seeds``
+        (``{file: {col: [min, max]}}``, see ``_adopt_hive_layout``)
+        adds path-derived column stats."""
+        if not fields.keys() & set(mf._INDEX_FIELDS):
+            fields.update(self._index_fields(files))
+        for f, cols in (seeds or {}).items():
+            fields["col_stats"].setdefault(f, {}).update(cols)
+        mf.append_commit(
+            self.path,
+            mf.next_commit(None, action, stats, files=files, **fields),
+        )
+        return self
+
+    @staticmethod
+    def _adopt_hive_layout(
+        files: list[str],
+        part_cols: list[str],
+        part_types: list[str],
+        hint: str = "",
+    ) -> tuple[dict, dict]:
+        """Adopt a foreign ``col=value`` layout whose partition columns
+        exist only in file paths (``convert``, ``convert_delta``): every
+        file must sit under exactly ``part_cols``' segments, in order.
+        Returns the ``_meta.json`` properties (the first column is the
+        engine's ``partition_by``; reads derive all of them at scan time
+        with the declared types) and each file's ``[v, v]`` col_stats
+        seed, so partition pruning works from version 0 though no
+        footer carries the columns."""
+        if not part_cols:
+            return {}, {}
+        bad = [
+            f for f in files
+            if f.count("/") != len(part_cols)
+            or any(
+                not seg.startswith(f"{c}=")
+                for seg, c in zip(f.split("/"), part_cols)
+            )
+        ]
+        if bad:
+            raise ValueError(
+                f"expected a {'/'.join(c + '=<v>' for c in part_cols)} "
+                f"layout for every file; offending: {bad[:3]}{hint}"
+            )
+        seeds: dict[str, dict] = {}
+        for f in files:
+            for seg, c, t in zip(f.split("/"), part_cols, part_types):
+                v = urllib.parse.unquote(seg.split("=", 1)[1])
+                if v and v != HIVE_DEFAULT_PARTITION:
+                    typed = _parse_partition_value(v, t)
+                    seeds.setdefault(f, {})[c] = [typed, typed]
+        props = {
+            "partition_by": part_cols[0],
+            "adopted_partition_type": part_types[0],
+        }
+        if len(part_cols) > 1:
+            props["adopted_extra_partitions"] = dict(
+                zip(part_cols[1:], part_types[1:])
+            )
+        return props, seeds
 
     @classmethod
     def create(
@@ -389,47 +495,31 @@ class LakehouseTable:
         columns — exactly where min/max stats decline because every
         file spans most of the value range. Build cost: one extra scan
         of each commit's new files per indexed column."""
-        path = fsio.absolutize(path)
-        if table_type not in (COPY_ON_WRITE, MERGE_ON_READ):
-            raise ValueError(
-                f"table_type must be {COPY_ON_WRITE!r} or "
-                f"{MERGE_ON_READ!r}, got {table_type!r}"
-            )
         if row_tracking and table_type == MERGE_ON_READ:
             # a MoR log row has no pre-image to inherit from until
             # compaction resolves it; Delta (the feature's origin) has
             # no MoR either — refuse rather than track approximately
             raise ValueError("row_tracking requires a copy-on-write table")
-        if fsio.exists(fsio.join(path, "_meta.json")):
-            if mode == "overwrite":
-                fsio.rmtree(path)
-            else:
-                raise FileExistsError(f"table exists: {path}")
-        fsio.makedirs(path)
-        fsio.write_atomic(
-            fsio.join(path, "_meta.json"),
-            json.dumps(
-                {
-                    "key_cols": key_cols,
-                    "precombine": precombine,
-                    "tiebreakers": tiebreakers or [],
-                    "partition_by": partition_by,
-                    "table_type": table_type,
-                    "cdc_enabled": cdc_enabled,
-                    "global_index": global_index,
-                    "bloom_index": bloom_index,
-                    "deletion_vectors": deletion_vectors,
-                    "record_index": record_index,
-                    "bucket_count": bucket_count,
-                    "bloom_columns": bloom_columns or [],
-                    "constraints": constraints or {},
-                    "generated_columns": generated_columns or {},
-                    "row_tracking": row_tracking,
-                },
-                indent=1,
-            ),
+        table = cls._claim(
+            spark,
+            path,
+            overwrite=mode == "overwrite",
+            key_cols=key_cols,
+            precombine=precombine,
+            tiebreakers=tiebreakers or [],
+            partition_by=partition_by,
+            table_type=table_type,
+            cdc_enabled=cdc_enabled,
+            global_index=global_index,
+            bloom_index=bloom_index,
+            deletion_vectors=deletion_vectors,
+            record_index=record_index,
+            bucket_count=bucket_count,
+            bloom_columns=bloom_columns or [],
+            constraints=constraints or {},
+            generated_columns=generated_columns or {},
+            row_tracking=row_tracking,
         )
-        table = cls(spark, path)
         commit_time = mf.make_commit_time()
         df = table._apply_generated(df)
         if precombine is not None:
@@ -453,27 +543,20 @@ class LakehouseTable:
                 ]
             ).jsonValue()
         )
-        mf.append_commit(
-            path,
-            mf.Commit(
-                version=0,
-                action="insert",
-                commit_time=commit_time,
-                files=files,
-                # Delta CDF's add-only rule (r7): a blind insert writes
-                # NO change sidecar — read_changes synthesizes the
-                # insert images from the commit's own data files, so a
-                # CDC-enabled bulk load costs ONE write of the batch,
-                # not two.
-                stats={"written_files": len(files),
-                       **({"cdc_add_only": True} if cdc_enabled else {}),
-                       **(extra_stats or {})},
-                ri_files=table._write_record_index(files, 0),
-                table_schema=schema_json,
-                **table._index_fields(files),
-            ),
+        # Delta CDF's add-only rule (r7): a blind insert writes NO
+        # change sidecar — read_changes synthesizes the insert images
+        # from the commit's own data files, so a CDC-enabled bulk load
+        # costs ONE write of the batch, not two.
+        return table._publish_v0(
+            "insert",
+            files,
+            {"written_files": len(files),
+             **({"cdc_add_only": True} if cdc_enabled else {}),
+             **(extra_stats or {})},
+            commit_time=commit_time,
+            ri_files=table._write_record_index(files, 0),
+            table_schema=schema_json,
         )
-        return table
 
     @classmethod
     def convert(
@@ -532,9 +615,7 @@ class LakehouseTable:
         Post-adoption engine writes lay files out under ``__pp=<k1>``
         only — the extra columns live in the data files from then on,
         where footer stats keep the pruning exact."""
-        path = fsio.absolutize(path)
-        if fsio.exists(fsio.join(path, "_meta.json")):
-            raise FileExistsError(f"already a lakehouse table: {path}")
+        path = cls._unclaimed(path, table_type)
         files = sorted(
             fsio.relpath(p, path) for p in fsio.walk_files(path, ".parquet")
         )
@@ -561,85 +642,19 @@ class LakehouseTable:
             raise ValueError(
                 "declare one partition_type per partition_by column"
             )
-        adopted_partition = bool(part_cols)
-        if adopted_partition:
-            bad = [
-                f for f in files
-                if f.count("/") != len(part_cols)
-                or any(
-                    not f.split("/")[i].startswith(f"{c}=")
-                    for i, c in enumerate(part_cols)
-                )
-            ]
-            if bad:
-                raise ValueError(
-                    f"expected a {'/'.join(c + '=<v>' for c in part_cols)} "
-                    f"layout for every file; offending: {bad[:3]}"
-                )
-        fsio.write_atomic(
-            fsio.join(path, "_meta.json"),
-            json.dumps(
-                {
-                    "key_cols": key_cols,
-                    "precombine": precombine,
-                    "tiebreakers": tiebreakers or [],
-                    "partition_by": part_cols[0] if part_cols else None,
-                    "table_type": table_type,
-                    "cdc_enabled": False,
-                    "global_index": False,
-                    "bloom_index": False,
-                    "deletion_vectors": False,
-                    "record_index": False,
-                    "constraints": {},
-                    "generated_columns": {},
-                    **(
-                        {"adopted_partition_type": part_types[0]}
-                        if adopted_partition
-                        else {}
-                    ),
-                    **(
-                        {
-                            "adopted_extra_partitions": dict(
-                                zip(part_cols[1:], part_types[1:])
-                            )
-                        }
-                        if len(part_cols) > 1
-                        else {}
-                    ),
-                },
-                indent=1,
-            ),
-        )
-        table = cls(spark, path)
-        index = table._index_fields(files)
-        if adopted_partition:
-            # seed per-file [v, v] stats for every path-only partition
-            # column: data skipping on them works from version 0 even
-            # though no footer carries the columns
-            for f in files:
-                segs = dict(
-                    seg.split("=", 1)
-                    for seg in f.split("/")
-                    if "=" in seg
-                )
-                for c, t in zip(part_cols, part_types):
-                    v = urllib.parse.unquote(segs.get(c, ""))
-                    if not v or v == HIVE_DEFAULT_PARTITION:
-                        continue
-                    typed = _parse_partition_value(v, t)
-                    index["col_stats"].setdefault(f, {})[c] = [typed, typed]
-        mf.append_commit(
+        props, seeds = cls._adopt_hive_layout(files, part_cols, part_types)
+        table = cls._claim(
+            spark,
             path,
-            mf.Commit(
-                version=0,
-                action="convert",
-                commit_time=mf.make_commit_time(),
-                files=files,
-                stats={"converted_files": len(files)},
-                **index,
-            ),
+            key_cols=key_cols,
+            precombine=precombine,
+            tiebreakers=tiebreakers or [],
+            table_type=table_type,
+            **props,
         )
-        return table
+        return table._publish_v0(
+            "convert", files, {"converted_files": len(files)}, seeds
+        )
 
     @classmethod
     def convert_hoodie(
@@ -688,9 +703,7 @@ class LakehouseTable:
             hoodie_timeline as ht,
         )
 
-        path = fsio.absolutize(path)
-        if fsio.exists(fsio.join(path, "_meta.json")):
-            raise FileExistsError(f"already a lakehouse table: {path}")
+        path = cls._unclaimed(path, table_type)
         slices = ht.latest_file_slices_rt(path)
         files = sorted(s["base"] for s in slices.values() if s["base"])
         # log-only file groups (no base yet) adopt too: their records
@@ -702,29 +715,14 @@ class LakehouseTable:
                 f"no base files under {path}; compact at least one "
                 "slice with Hudi so a schema-bearing base exists"
             )
-        if log_paths:
-            table_type = MERGE_ON_READ
-        fsio.write_atomic(
-            fsio.join(path, "_meta.json"),
-            json.dumps(
-                {
-                    "key_cols": key_cols,
-                    "precombine": precombine,
-                    "tiebreakers": tiebreakers or [],
-                    "partition_by": None,
-                    "table_type": table_type,
-                    "cdc_enabled": False,
-                    "global_index": False,
-                    "bloom_index": False,
-                    "deletion_vectors": False,
-                    "record_index": False,
-                    "constraints": {},
-                    "generated_columns": {},
-                },
-                indent=1,
-            ),
+        table = cls._claim(
+            spark,
+            path,
+            key_cols=key_cols,
+            precombine=precombine,
+            tiebreakers=tiebreakers or [],
+            table_type=MERGE_ON_READ if log_paths else table_type,
         )
-        table = cls(spark, path)
         log_files: list[str] = []
         dv_files: list[str] = []
         n_tombstones = 0
@@ -802,33 +800,14 @@ class LakehouseTable:
                 )
             log_files = table._write_files(data, "l00000", log=True)
             logs.unpersist()
-        mf.append_commit(
-            path,
-            mf.Commit(
-                version=0,
-                action="convert",
-                commit_time=mf.make_commit_time(),
-                files=files,
-                log_files=log_files,
-                dv_files=dv_files,
-                stats={
-                    "converted_files": len(files),
-                    "source_format": "hoodie",
-                    **(
-                        {"adopted_log_files": len(log_paths)}
-                        if log_paths
-                        else {}
-                    ),
-                    **(
-                        {"adopted_tombstone_keys": n_tombstones}
-                        if n_tombstones
-                        else {}
-                    ),
-                },
-                **table._index_fields(files),
-            ),
+        stats = {"converted_files": len(files), "source_format": "hoodie"}
+        if log_paths:
+            stats["adopted_log_files"] = len(log_paths)
+        if n_tombstones:
+            stats["adopted_tombstone_keys"] = n_tombstones
+        return table._publish_v0(
+            "convert", files, stats, log_files=log_files, dv_files=dv_files
         )
-        return table
 
     @classmethod
     def convert_delta(
@@ -879,9 +858,7 @@ class LakehouseTable:
         cannot see)."""
         from hudi_and_delta_showcase_spark.tables import delta_log as dl
 
-        path = fsio.absolutize(path)
-        if fsio.exists(fsio.join(path, "_meta.json")):
-            raise FileExistsError(f"already a lakehouse table: {path}")
+        path = cls._unclaimed(path, table_type)
         meta_d, files, adds = dl.adopt_delta_snapshot(path)
         if not files:
             raise FileNotFoundError(f"current snapshot lists no files: {path}")
@@ -912,10 +889,8 @@ class LakehouseTable:
         precombine = to_phys.get(precombine, precombine)
         tiebreakers = [to_phys.get(c, c) for c in (tiebreakers or [])]
         part_cols_logical = meta_d.get("partitionColumns") or []
-        part_cols = [to_phys.get(c, c) for c in part_cols_logical]
-        partition_by = part_cols[0] if part_cols else None
         part_types: list[str] = []
-        if part_cols:
+        if part_cols_logical:
             from pyspark.sql.types import StructType
 
             schema = StructType.fromJson(
@@ -925,83 +900,32 @@ class LakehouseTable:
                 schema[c].dataType.simpleString()
                 for c in part_cols_logical
             ]
-            hive_laid = all(
-                f.count("/") == len(part_cols)
-                and all(
-                    f.split("/")[i].startswith(f"{c}=")
-                    for i, c in enumerate(part_cols)
-                )
-                for f in files
-            )
-            if not hive_laid:
-                raise ValueError(
-                    "partitioned delta snapshot without hive-style "
-                    f"{'/'.join(c + '=<v>' for c in part_cols)} dirs "
-                    "(column-mapped layouts record partitions only in "
-                    "partitionValues) — read it via read_delta_table "
-                    "instead"
-                )
-        fsio.write_atomic(
-            fsio.join(path, "_meta.json"),
-            json.dumps(
-                {
-                    "key_cols": key_cols,
-                    "precombine": precombine,
-                    "tiebreakers": tiebreakers or [],
-                    "partition_by": partition_by,
-                    "table_type": table_type,
-                    "cdc_enabled": False,
-                    "global_index": False,
-                    "bloom_index": False,
-                    # live foreign DVs keep working post-adoption: the
-                    # flag turns on the engine's DV machinery so later
-                    # deletes extend the sidecars instead of rewriting
-                    "deletion_vectors": any(
-                        a.get("deletionVector") for a in adds.values()
-                    ),
-                    "record_index": False,
-                    "constraints": {},
-                    "generated_columns": {},
-                    **(
-                        {"adopted_partition_type": part_types[0]}
-                        if partition_by is not None
-                        else {}
-                    ),
-                    **(
-                        {
-                            "adopted_extra_partitions": dict(
-                                zip(part_cols[1:], part_types[1:])
-                            )
-                        }
-                        if len(part_cols) > 1
-                        else {}
-                    ),
-                },
-                indent=1,
-            ),
+        props, seeds = cls._adopt_hive_layout(
+            sorted(files),
+            [to_phys.get(c, c) for c in part_cols_logical],
+            part_types,
+            hint=" (a partitioned delta snapshot without hive-style dirs,"
+            " e.g. column-mapped, records partitions only in "
+            "partitionValues: read it via read_delta_table instead)",
         )
-        table = cls(spark, path)
-        index = table._index_fields(sorted(files))
-        if partition_by is not None:
-            import urllib.parse as _up
-
-            for f in files:
-                segs = dict(
-                    seg.split("=", 1)
-                    for seg in f.split("/")
-                    if "=" in seg
-                )
-                for c, t in zip(part_cols, part_types):
-                    v = _up.unquote(segs.get(c, ""))
-                    if not v or v == HIVE_DEFAULT_PARTITION:
-                        continue
-                    typed = _parse_partition_value(v, t)
-                    index["col_stats"].setdefault(f, {})[c] = [typed, typed]
         dv_map = {
             f: a["deletionVector"]
             for f, a in adds.items()
             if a.get("deletionVector")
         }
+        table = cls._claim(
+            spark,
+            path,
+            key_cols=key_cols,
+            precombine=precombine,
+            tiebreakers=tiebreakers,
+            table_type=table_type,
+            # live foreign DVs keep working post-adoption: the flag
+            # turns on the engine's DV machinery so later deletes
+            # extend the sidecars instead of rewriting
+            deletion_vectors=bool(dv_map),
+            **props,
+        )
         dv_files: list[str] = []
         if dv_map:
             from hudi_and_delta_showcase_spark.tables import delta_dv
@@ -1023,27 +947,18 @@ class LakehouseTable:
             widened_schema = json.dumps(
                 dl._physical_schema(meta_d)[1].jsonValue()
             )
-        mf.append_commit(
-            path,
-            mf.Commit(
-                version=0,
-                action="convert",
-                commit_time=mf.make_commit_time(),
-                files=sorted(files),
-                table_schema=widened_schema,
-                stats={
-                    "converted_files": len(files),
-                    "source_format": "delta",
-                    **(
-                        {"adopted_dv_files": len(dv_map)} if dv_map else {}
-                    ),
-                },
-                dv_files=dv_files,
-                column_mapping=dict(mapping),
-                **index,
-            ),
+        stats = {"converted_files": len(files), "source_format": "delta"}
+        if dv_map:
+            stats["adopted_dv_files"] = len(dv_map)
+        return table._publish_v0(
+            "convert",
+            sorted(files),
+            stats,
+            seeds,
+            table_schema=widened_schema,
+            dv_files=dv_files,
+            column_mapping=dict(mapping),
         )
-        return table
 
     @classmethod
     def convert_iceberg(
@@ -1081,9 +996,7 @@ class LakehouseTable:
         cycle."""
         from hudi_and_delta_showcase_spark.tables import iceberg_meta as im
 
-        path = fsio.absolutize(path)
-        if fsio.exists(fsio.join(path, "_meta.json")):
-            raise FileExistsError(f"already a lakehouse table: {path}")
+        path = cls._unclaimed(path, table_type)
         meta = im.read_iceberg_metadata(path)
         snap = {s["snapshot-id"]: s for s in meta["snapshots"]}[
             meta["current-snapshot-id"]
@@ -1099,7 +1012,8 @@ class LakehouseTable:
         )
         if not files:
             raise FileNotFoundError(f"current snapshot lists no files: {path}")
-        if (pos_dels or eq_dels) and any(f.startswith("..") for f in files):
+        deletes = bool(pos_dels or eq_dels)
+        if deletes and any(f.startswith("..") for f in files):
             # DV sidecar identity is the file's path RELATIVE to the
             # table root; a delete-bearing tree whose recorded data
             # paths resolve OUTSIDE the root (a live duplicate of the
@@ -1113,62 +1027,32 @@ class LakehouseTable:
                 f"outside the table root (e.g. {outside!r}); "
                 "relocate the tree before adoption"
             )
-        fsio.write_atomic(
-            fsio.join(path, "_meta.json"),
-            json.dumps(
-                {
-                    "key_cols": key_cols,
-                    "precombine": precombine,
-                    "tiebreakers": tiebreakers or [],
-                    "partition_by": None,
-                    "table_type": table_type,
-                    "cdc_enabled": False,
-                    "global_index": False,
-                    "bloom_index": False,
-                    # adopted delete state lives in DV sidecars; the
-                    # flag keeps later deletes on the same discipline
-                    "deletion_vectors": bool(pos_dels or eq_dels),
-                    "record_index": False,
-                    "constraints": {},
-                    "generated_columns": {},
-                },
-                indent=1,
-            ),
+        table = cls._claim(
+            spark,
+            path,
+            key_cols=key_cols,
+            precombine=precombine,
+            tiebreakers=tiebreakers or [],
+            table_type=table_type,
+            # adopted delete state lives in DV sidecars; the flag keeps
+            # later deletes on the same discipline
+            deletion_vectors=deletes,
         )
-        table = cls(spark, path)
         dv_files: list[str] = []
-        if pos_dels or eq_dels:
+        stats = {
+            "converted_files": len(files),
+            "source_format": "iceberg",
+            "source_snapshot_id": meta["current-snapshot-id"],
+        }
+        if deletes:
             dv_files = table._write_dv_files(
                 im.deleted_positions_df(
                     spark, path, entries, pos_dels, eq_dels, meta
                 ),
                 "c00000",
             )
-        mf.append_commit(
-            path,
-            mf.Commit(
-                version=0,
-                action="convert",
-                commit_time=mf.make_commit_time(),
-                files=files,
-                stats={
-                    "converted_files": len(files),
-                    "source_format": "iceberg",
-                    "source_snapshot_id": meta["current-snapshot-id"],
-                    **(
-                        {
-                            "adopted_delete_files": len(pos_dels)
-                            + len(eq_dels)
-                        }
-                        if (pos_dels or eq_dels)
-                        else {}
-                    ),
-                },
-                dv_files=dv_files,
-                **table._index_fields(files),
-            ),
-        )
-        return table
+            stats["adopted_delete_files"] = len(pos_dels) + len(eq_dels)
+        return table._publish_v0("convert", files, stats, dv_files=dv_files)
 
     @classmethod
     def clone(
@@ -1206,15 +1090,13 @@ class LakehouseTable:
                 "cannot shallow-clone a table with outstanding deletion "
                 "vectors: run optimize() on the source first"
             )
-        dest = fsio.absolutize(dest_path)
-        if fsio.exists(fsio.join(dest, "_meta.json")):
-            raise FileExistsError(f"already a lakehouse table: {dest}")
-        fsio.makedirs(dest)
-        fsio.write_atomic(
-            fsio.join(dest, "_meta.json"),
-            fsio.read_pointer_text(fsio.join(src.path, "_meta.json")),
+        dest = cls._claim(
+            spark,
+            dest_path,
+            **json.loads(
+                fsio.read_pointer_text(fsio.join(src.path, "_meta.json"))
+            ),
         )
-
         if deep:
             # Delta DEEP CLONE: byte-copy the source's LIVE files (base
             # + MoR logs) under the same relative names, one task per
@@ -1225,7 +1107,7 @@ class LakehouseTable:
             _distributed_copy(
                 spark,
                 [
-                    (fsio.resolve(src.path, f), fsio.join(dest, f))
+                    (fsio.resolve(src.path, f), fsio.join(dest.path, f))
                     for f in [*prev.files, *prev.log_files]
                 ],
             )
@@ -1238,29 +1120,22 @@ class LakehouseTable:
             def ref(f: str) -> str:
                 return fsio.resolve(src.path, f)
 
-        mf.append_commit(
-            dest,
-            mf.Commit(
-                version=0,
-                action="clone",
-                commit_time=mf.make_commit_time(),
-                files=[ref(f) for f in prev.files],
-                log_files=[ref(f) for f in prev.log_files],
-                stats={
-                    "cloned_from": src.path,
-                    "source_version": prev.version,
-                    "clone_depth": "deep" if deep else "shallow",
-                },
-                key_ranges={ref(f): v for f, v in prev.key_ranges.items()},
-                col_stats={ref(f): v for f, v in prev.col_stats.items()},
-                row_counts={ref(f): v for f, v in prev.row_counts.items()},
-                key_blooms={ref(f): v for f, v in prev.key_blooms.items()},
-                column_blooms={ref(f): v for f, v in prev.column_blooms.items()},
-                table_schema=prev.table_schema,
-                column_mapping=dict(prev.column_mapping),
-            ),
+        return dest._publish_v0(
+            "clone",
+            [ref(f) for f in prev.files],
+            {
+                "cloned_from": src.path,
+                "source_version": prev.version,
+                "clone_depth": "deep" if deep else "shallow",
+            },
+            log_files=[ref(f) for f in prev.log_files],
+            table_schema=prev.table_schema,
+            column_mapping=dict(prev.column_mapping),
+            **{
+                name: {ref(f): v for f, v in getattr(prev, name).items()}
+                for name in mf._INDEX_FIELDS
+            },
         )
-        return cls(spark, dest)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "LakehouseTable":
@@ -1700,7 +1575,7 @@ class LakehouseTable:
                 raise ValueError("cannot partition by a meta column")
 
         def transform(meta):
-            cur = meta["partition_by"]
+            cur = meta.get("partition_by")
             if column == cur:
                 raise ValueError(
                     f"partition spec is already {column!r}"
@@ -1894,14 +1769,9 @@ class LakehouseTable:
             # precombine already made the keys unique, and a left-anti
             # join ignores duplicates anyway: no distinct
             source_keys = F.broadcast(stamped.select(*keys).alias("s"))
-            # null-safe equality: a null partition value must MATCH the
-            # incoming null (plain `=` never matches null, so the old
-            # row would escape the anti-join and duplicate the key)
-            cond = None
-            for c in keys:
-                e = F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-                cond = e if cond is None else cond & e
-            kept = target.join(source_keys, cond, "left_anti")
+            # null-safe: a null partition value must match the incoming
+            # null, or the old row would survive and duplicate the key
+            kept = target.join(source_keys, key_match(keys), "left_anti")
             merged = kept.unionByName(stamped, allowMissingColumns=True)
             if self.cdc_enabled:
                 # change data feed (Delta CDF): matched old rows are
@@ -2062,11 +1932,7 @@ class LakehouseTable:
         affected, untouched, skipped = self._rewrite_candidates(
             prev, stamped, self._plan_rows(stamped)
         )
-
-        cond = None
-        for c in kcols:
-            e = F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-            cond = e if cond is None else cond & e
+        cond = key_match(kcols)
 
         if self.deletion_vectors:
             # merge-on-read delete: no base file is rewritten — record
@@ -2246,7 +2112,8 @@ class LakehouseTable:
                                    "optimize")
             value = str(where_partition)
             files = [
-                f for f in prev.files if self._partition_value_of(f) == value
+                f for f in prev.files
+                if self._partition_spec_value_of(f)[1] == value
             ]
             if not files:
                 return prev
@@ -3490,19 +3357,6 @@ class LakehouseTable:
         skipped = [f for f in affected if f in with_bloom and f not in hits]
         return kept, skipped
 
-    def _partition_value_of(self, rel_file: str) -> str:
-        """Partition value encoded in a file's path: the engine's own
-        ``__pp=`` dirs, or — on adopted foreign layouts — the declared
-        partition column's ``col=value`` dir."""
-        parts = dict(
-            seg.split("=", 1) for seg in rel_file.split("/") if "=" in seg
-        )
-        if "__pp" in parts:
-            return urllib.parse.unquote(parts["__pp"])
-        if self.partition_by and self.partition_by in parts:
-            return urllib.parse.unquote(parts[self.partition_by])
-        return ""
-
     def _bucket_expr(self) -> F.Column:
         """The bucket id of each row: ``pmod(xxhash64(record_key), N)``
         — pure codegen arithmetic, identical on the write path, the
@@ -3839,11 +3693,7 @@ class LakehouseTable:
 
         keys = self._resolution_cols()
         source_keys = F.broadcast(stamped.select(*keys).distinct().alias("s"))
-        cond = None
-        for c in keys:
-            e = F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-            cond = e if cond is None else cond & e
-        pre = target.alias("t").join(source_keys, cond, "left_semi")
+        pre = target.alias("t").join(source_keys, key_match(keys), "left_semi")
         tagged = pre.withColumn("__cdc_src", F.lit("t")).unionByName(
             stamped.withColumn("__cdc_src", F.lit("s")),
             allowMissingColumns=True,

@@ -22,13 +22,13 @@ and get full ``Commit`` snapshots back from ``read_commit`` — the
 delta encoding is invisible above this module. Pre-checkpointing
 tables (full snapshot per commit) read back transparently.
 
-Derivation: every commit after version 0 is built by ``next_commit``
-from its parent, so this module alone decides which fields are
-cumulative state (carried over unless a writer changes them) and which
-are per-commit (``stats``, ``cdc_files``, ``commit_time``). The
-per-file index entries (``_INDEX_FIELDS``) are restricted to the
-commit's live ``files``: an entry naming a rewritten or vanished file
-never outlives it.
+Derivation: every commit is built by ``next_commit`` from its parent
+(version 0 from the empty table, ``prev=None``), so this module alone
+decides which fields are cumulative state (carried over unless a
+writer changes them) and which are per-commit (``stats``,
+``cdc_files``, ``commit_time``). The per-file index entries
+(``_INDEX_FIELDS``) are restricted to the commit's live ``files``: an
+entry naming a rewritten or vanished file never outlives it.
 
 Scale: at 100 TB / millions of files the old full-list-per-commit
 design made every commit O(table); here steady-state commit IO is
@@ -194,14 +194,20 @@ _INDEX_FIELDS = (
 _DICT_FIELDS = (*_INDEX_FIELDS, "txn", "column_mapping")
 
 
-def next_commit(prev: Commit, action: str, stats: dict, **changes) -> Commit:
+def next_commit(
+    prev: Commit | None, action: str, stats: dict, **changes
+) -> Commit:
     """The commit following ``prev``: every field carries over from
     ``prev`` unless given in ``changes``, except the per-commit ones
     (``commit_time`` defaults to now, ``cdc_files`` to none). The
-    per-file index entries are then restricted to the new ``files``."""
+    per-file index entries are then restricted to the new ``files``.
+    ``prev=None`` is the empty table, so its successor is version 0
+    holding only what ``changes`` gives."""
     if "commit_time" not in changes:
         changes["commit_time"] = make_commit_time()
     changes.setdefault("cdc_files", [])
+    if prev is None:
+        prev = Commit(version=-1, action="", commit_time="")
     commit = dataclasses.replace(
         prev, version=prev.version + 1, action=action, stats=stats, **changes
     )

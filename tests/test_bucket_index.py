@@ -186,7 +186,7 @@ def test_scoped_optimize_respects_bucket_layout(spark, tmp_path):
     # partition, yet one new file per (partition, bucket), rows unchanged
     inc = t.optimize(target_files=3, cluster_by=["k"], incremental=True)
     cells = Counter(
-        (t._partition_value_of(f), t._bucket_of(f))
+        (t._partition_spec_value_of(f)[1], t._bucket_of(f))
         for f in inc.files
         if f not in c.files
     )

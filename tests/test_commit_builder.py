@@ -3,11 +3,15 @@ parent (``manifest.next_commit``, ``LakehouseTable._commit_rewrite``):
 index entries only for live files, idempotent-writer watermarks that
 survive every action, schema and column mapping carried unless the
 action changes them, and no deletion vector or record-index sidecar of
-the parent surviving a full rewrite."""
+the parent surviving a full rewrite. ``next_commit`` is the only
+commit builder: no module but ``tables/manifest.py`` constructs a
+``Commit``."""
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 
 from hudi_and_delta_showcase_spark.tables import LakehouseTable
 from hudi_and_delta_showcase_spark.tables import fsio
@@ -100,3 +104,23 @@ def test_every_derived_commit_keeps_the_invariants(spark, tmp_path):
     assert restored.action == "restore" and restored.files == v2.files
     assert restored.column_mapping == v2.column_mapping == {}
     assert restored.table_schema == v2.table_schema
+
+
+def test_commit_is_built_only_in_the_manifest_module():
+    """Every writer derives its commits through ``mf.next_commit``
+    (version 0 from the empty table): a ``Commit(...)`` or
+    ``x.Commit(...)`` call anywhere else in the package is a second
+    commit builder."""
+    pkg = pathlib.Path(mf.__file__).resolve().parents[1]
+    builder = pathlib.Path(mf.__file__).resolve()
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == builder:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "Commit"
+                or getattr(node.func, "attr", None) == "Commit"
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []

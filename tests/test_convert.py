@@ -91,6 +91,12 @@ def test_convert_refuses_tables_and_hive_layouts(spark, tmp_path):
         LakehouseTable.convert(
             spark, str(tmp_path / "empty"), key_cols=["k"]
         )
+    # a misspelled table type is refused before anything is written
+    typo = str(tmp_path / "typo")
+    _plain_seed(spark, typo)
+    with pytest.raises(ValueError, match="table_type"):
+        LakehouseTable.convert(spark, typo, key_cols=["k"], table_type="mro")
+    assert not os.path.exists(os.path.join(typo, "_meta.json"))
 
 
 def test_convert_mor_upsert_merges_logs(spark, tmp_path):

@@ -954,6 +954,47 @@ def test_mixed_spec_table_exports_unpartitioned_until_converged(
         .collect()
     )
     assert got == [(1, 10, "a"), (2, 20, "b"), (3, 30, "c")]
+    # each converged file's partition value is its own ``v`` in both
+    # exports (the current spec's ``__pp1=`` dirs, not an empty value)
+    v_of = {}
+    for f, cols in t._commit(None).col_stats.items():
+        lo, hi = cols["v"]
+        assert lo == hi
+        v_of[f] = lo
+    assert sorted(v_of.values()) == ["a", "b", "c"]
+    from hudi_and_delta_showcase_spark.tables.delta_log import (
+        export_delta_log,
+    )
+    from hudi_and_delta_showcase_spark.tables.iceberg_meta import (
+        _snapshot_entries,
+    )
+
+    ice = {
+        os.path.relpath(e["data_file"]["file_path"], t.path):
+        e["data_file"]["partition"]["v"]
+        for e in _snapshot_entries(t.path, iceberg_snapshots(t.path)[-1])
+    }
+    assert ice == v_of
+    export_delta_log(t)
+    log_dir = os.path.join(t.path, "_delta_log")
+    logs = sorted(f for f in os.listdir(log_dir) if re.match(r"\d+\.json$", f))
+    actions = [
+        [json.loads(line) for line in open(os.path.join(log_dir, f))]
+        for f in logs
+    ]
+    part_cols = [
+        a["metaData"]["partitionColumns"]
+        for commit in actions
+        for a in commit
+        if "metaData" in a
+    ]
+    assert part_cols[-1] == ["v"]
+    adds = {
+        a["add"]["path"]: a["add"]["partitionValues"]
+        for a in actions[-1]
+        if "add" in a
+    }
+    assert adds == {f: {"v": v} for f, v in v_of.items()}
 
 
 def test_schema_history_per_snapshot(spark, tmp_path):
