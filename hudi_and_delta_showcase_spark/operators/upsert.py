@@ -25,24 +25,28 @@ partitions before this operator runs (see tables/cow.py).
 
 from __future__ import annotations
 
-import functools
-import operator
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from hudi_and_delta_showcase_spark.operators.cdc import precombine_dedup
 
 
+def _quote_ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def key_match(cols: list[str], left: str = "t", right: str = "s") -> Column:
     """Null-safe equality of ``cols`` between the ``left`` and ``right``
     aliases: a null key must MATCH a null key (plain ``=`` never
     matches null, so a null-keyed old row would escape an anti-join
-    and duplicate its key)."""
-    return functools.reduce(
-        operator.and_,
-        (F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}")) for c in cols),
-    )
+    and duplicate its key). One SQL-text expression: the same
+    condition built node by node through the Column API costs a py4j
+    round trip per node."""
+    lq, rq = _quote_ident(left), _quote_ident(right)
+    return F.expr(" AND ".join(
+        f"{lq}.{_quote_ident(c)} <=> {rq}.{_quote_ident(c)}" for c in cols
+    ))
 
 
 def upsert(

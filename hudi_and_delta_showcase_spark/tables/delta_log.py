@@ -26,6 +26,7 @@ source, so 100 TB tables read like any partitioned parquet dataset.
 
 from __future__ import annotations
 
+import datetime
 import json
 import re
 import time
@@ -300,14 +301,8 @@ def write_checkpoint(spark: SparkSession, path: str,
     add_rows = [None, None] + [_add_row(f) for f in files]
 
     def _pq_write(tbl, dst: str) -> None:
-        if fsio.is_remote(dst):
-            import pyarrow.fs as pafs
-
-            pfs, ppath = pafs.FileSystem.from_uri(dst)
-            with pfs.open_output_stream(ppath) as out:
-                pq.write_table(tbl, out)
-        else:
-            pq.write_table(tbl, dst)
+        pfs, ppath = fsio.arrow_fs(dst)
+        pq.write_table(tbl, ppath, filesystem=pfs)
 
     if v2:
         # spec: a table whose current checkpoint is V2 must carry the
@@ -397,27 +392,14 @@ def write_checkpoint(spark: SparkSession, path: str,
 
 def parquet_column_names(fpath: str) -> set[str]:
     """Footer-only column-name read (id-mapped adoption guard)."""
-    import pyarrow.parquet as pq
-
-    if fsio.is_remote(fpath):
-        import pyarrow.fs as pafs
-
-        pfs, ppath = pafs.FileSystem.from_uri(fpath)
-        with pfs.open_input_file(ppath) as fh:
-            return set(pq.read_schema(fh).names)
-    return set(pq.read_schema(fpath).names)
+    return set(fsio.read_footer(fpath).schema.to_arrow_schema().names)
 
 
 def _read_parquet_rows(cp: str) -> list[dict]:
     import pyarrow.parquet as pq
 
-    if fsio.is_remote(cp):
-        import pyarrow.fs as pafs
-
-        pfs, ppath = pafs.FileSystem.from_uri(cp)
-        with pfs.open_input_file(ppath) as fh:
-            return pq.read_table(fh).to_pylist()
-    return pq.read_table(cp).to_pylist()
+    pfs, ppath = fsio.arrow_fs(cp)
+    return pq.read_table(ppath, filesystem=pfs).to_pylist()
 
 
 def _checkpoint_files(path: str, lc_doc: dict) -> list[str]:
@@ -1258,48 +1240,37 @@ def restore_delta_table(
     }
 
 
+def _json_bound(v):
+    """A parquet footer bound as a JSON-stable scalar, or None for a
+    type the stats do not record: str/int/float/bool as they are,
+    timestamps and dates as ISO-8601 strings (aware timestamps as
+    naive UTC: an aware bound would never compare against the
+    engine's naive literals)."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    if isinstance(v, datetime.date):  # a datetime is a date
+        return v.isoformat()
+    return v if isinstance(v, (str, int, float, bool)) else None
+
+
 def _footer_stats_json(fpath: str) -> str | None:
-    """Delta ``stats`` JSON (numRecords + minValues/maxValues) from
-    one parquet footer — exact scalars only, timestamps as ISO
-    strings (delta-spark's own stats dialect)."""
-    import datetime as _dt
-
-    import pyarrow.parquet as pq
-
+    """Delta ``stats`` JSON (numRecords + minValues/maxValues of the
+    first 32 columns) from one parquet footer — ``_json_bound`` scalars
+    (delta-spark's own stats dialect), no NaN bounds. None when the
+    footer cannot be read."""
     try:
-        md = pq.ParquetFile(fsio.uri_path(fpath)).metadata
-    except Exception:
+        n, bounds = fsio.footer_bounds(fsio.read_footer(fpath), 32)
+    except (OSError, ValueError):
         return None
     mins: dict = {}
     maxs: dict = {}
-    names = md.schema.names
-    for i, col in enumerate(names[:32]):
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(i).statistics
-            if st is None or st.min is None or st.max is None:
-                lo = hi = None
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if lo is None:
-            continue
-        if isinstance(lo, _dt.datetime):
-            if lo.tzinfo is not None:
-                lo = lo.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                hi = hi.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            lo, hi = lo.isoformat(), hi.isoformat()
-        elif isinstance(lo, _dt.date):
-            lo, hi = lo.isoformat(), hi.isoformat()
-        elif not isinstance(lo, (str, int, float, bool)):
-            continue
-        if isinstance(lo, float) and (lo != lo or hi != hi):
+    for col, (lo, hi) in bounds.items():
+        lo, hi = _json_bound(lo), _json_bound(hi)
+        if lo is None or lo != lo or hi != hi:  # unrecorded type, NaN
             continue
         mins[col] = lo
         maxs[col] = hi
-    return json.dumps(
-        {"numRecords": md.num_rows, "minValues": mins, "maxValues": maxs}
-    )
+    return json.dumps({"numRecords": n, "minValues": mins, "maxValues": maxs})
 
 
 def _physical_schema(meta: dict):

@@ -607,3 +607,66 @@ def file_size(path: str) -> int:
         return os.stat(path).st_size
     fs, _, p = _jfs(path)
     return int(fs.getFileStatus(p).getLen())
+
+
+# --------------------------------------------------------------------- #
+# pyarrow access to table FILES (parquet footers, executor-side copies)
+# --------------------------------------------------------------------- #
+
+
+def arrow_fs(path: str):
+    """``(pyarrow FileSystem, path within it)`` for a table file. Needs
+    no SparkSession, so it also serves inside Spark tasks. ``file:``
+    URIs in either form (``file:/x``, ``file:///x``) map to the local
+    filesystem with the path taken literally, as Hadoop writes it (a
+    hive dir value like ``a%3Ab`` is a literal name on disk); other
+    schemes go through pyarrow's URI resolution (s3/gcs/hdfs/abfs).
+    Raises ``ValueError``/``OSError`` for a scheme pyarrow cannot
+    serve."""
+    import pyarrow.fs as pafs
+
+    if not is_remote(path) or path[:5].lower() == "file:":
+        return pafs.LocalFileSystem(), uri_path(path)
+    return pafs.FileSystem.from_uri(path)
+
+
+def read_footer(path: str):
+    """The parquet footer (``pyarrow.parquet.FileMetaData``) of one
+    file: a footer-only read, no data pages. Raises ``OSError`` when
+    the file cannot be opened and ``ValueError`` (``ArrowInvalid``)
+    when it is not a whole parquet file."""
+    import pyarrow.parquet as pq
+
+    fs, p = arrow_fs(path)
+    with fs.open_input_file(p) as fh:
+        return pq.ParquetFile(fh).metadata
+
+
+def footer_bounds(md, limit: int | None = None) -> tuple[int, dict]:
+    """``(num_rows, {column: (min, max)})`` from a parquet footer, over
+    the top-level primitive columns among the first ``limit`` leaf
+    columns (all when None). A column's bounds fold its row groups'
+    statistics: an all-null row group contributes nothing, and a
+    value-bearing row group without min/max leaves the column out, so
+    a reader scans the file for it. Values are pyarrow's statistics
+    scalars; each caller keeps the types its format records."""
+    schema = md.schema
+    groups = [md.row_group(rg) for rg in range(md.num_row_groups)]
+    bounds: dict = {}
+    for i in range(min(len(schema), limit or len(schema))):
+        col = schema.column(i)
+        if col.path != col.name:  # a leaf of a nested column
+            continue
+        lo = hi = None
+        for g in groups:
+            st = g.column(i).statistics
+            mn, mx = (st.min, st.max) if st is not None else (None, None)
+            if mn is not None and mx is not None:
+                lo = mn if lo is None else min(lo, mn)
+                hi = mx if hi is None else max(hi, mx)
+            elif st is None or st.null_count != g.num_rows:
+                break
+        else:
+            if lo is not None:
+                bounds[col.name] = (lo, hi)
+    return md.num_rows, bounds

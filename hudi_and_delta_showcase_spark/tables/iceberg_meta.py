@@ -488,26 +488,16 @@ def _record_counts(spark, table_path: str, rel_files: list[str]) -> dict[str, in
     from pyspark.sql import functions as F
 
     try:
-        import pyarrow.parquet as pq
-
-        out: dict[str, int] = {}
-        for rel in rel_files:
-            src = fsio.join(table_path, rel)
-            if fsio.is_remote(src):
-                import pyarrow.fs as pafs
-
-                pfs, ppath = pafs.FileSystem.from_uri(fsio.absolutize(src))
-                with pfs.open_input_file(ppath) as fh:
-                    out[rel] = pq.ParquetFile(fh).metadata.num_rows
-            else:
-                out[rel] = pq.ParquetFile(fsio.uri_path(src)).metadata.num_rows
-        return out
-    except (ImportError, OSError, ValueError) as exc:
+        return {
+            rel: fsio.read_footer(fsio.join(table_path, rel)).num_rows
+            for rel in rel_files
+        }
+    except (OSError, ValueError) as exc:
         # unreadable footer: the distributed scan below is exact too.
-        # Narrowed from a bare except (r14, advice): an AttributeError/
-        # KeyError here is a bug in THIS code and must surface rather
-        # than masquerade as a perf regression. pyarrow's ArrowInvalid
-        # subclasses ValueError; IO failures are OSError.
+        # Narrow on purpose: an AttributeError/KeyError here is a bug
+        # in THIS code and must surface rather than masquerade as a
+        # perf regression. pyarrow's ArrowInvalid subclasses
+        # ValueError; IO failures are OSError.
         import warnings
 
         warnings.warn(
@@ -1007,7 +997,13 @@ def export_iceberg_metadata(
                 x.strip() for x in cspec.split(",") if x.strip()
             ]
         new_files = [f for f in cur if f not in prior_meta]
-        counts = _record_counts(table.spark, table.path, new_files)
+        # the manifest's row_counts are these files' footer counts;
+        # read a footer only where the commit recorded none
+        counts = {f: c.row_counts[f] for f in new_files if f in c.row_counts}
+        counts.update(_record_counts(
+            table.spark, table.path,
+            [f for f in new_files if f not in counts],
+        ))
 
         schema_json = json.loads(
             c.table_schema
@@ -2039,65 +2035,6 @@ def write_iceberg_dataset_batches(
 # --------------------------------------------------------------------------
 
 
-def _footer_file_stats(
-    files: list[str], bound_fields: list[dict]
-) -> dict[str, tuple[int, dict[int, tuple]]]:
-    """Per-file ``{path: (row_count, {field-id: (min, max)})}`` straight
-    from the parquet FOOTERS — driver-side, O(files), zero Spark jobs
-    (r13 opt: the same metadata-only cost class the engine's own
-    ``LakehouseTable._file_column_stats`` already uses). Exactness: the
-    bound-eligible types (``_BOUND_PACK``) are all fixed-width
-    primitives (int/long/float/double/boolean/date/timestamp), whose
-    parquet column statistics are exact — never the truncated binary
-    stats strings can carry. A column whose stats are missing in any
-    value-bearing row group records no bounds for that file
-    (conservative: the scan keeps it). Raises on unreadable footers —
-    the caller falls back to the distributed aggregation."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, tuple[int, dict[int, tuple]]] = {}
-    for fp in files:
-        if fsio.is_remote(fp):
-            import pyarrow.fs as pafs
-
-            pfs, ppath = pafs.FileSystem.from_uri(fsio.absolutize(fp))
-            with pfs.open_input_file(ppath) as fh:
-                md = pq.ParquetFile(fh).metadata
-        else:
-            md = pq.ParquetFile(fsio.uri_path(fp)).metadata
-        names = md.schema.names
-        per_field: dict[int, tuple] = {}
-        for f in bound_fields:
-            if f["name"] not in names:
-                continue
-            idx = names.index(f["name"])
-            mins, maxs = [], []
-            usable = True
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(idx)
-                st = col.statistics
-                if st is None:
-                    usable = False
-                    break
-                if st.min is None or st.max is None:
-                    # all-null groups carry no min/max and contribute
-                    # nothing; a value-bearing group without stats
-                    # makes the column unusable for this file
-                    if (
-                        st.null_count is not None
-                        and st.null_count == md.row_group(rg).num_rows
-                    ):
-                        continue
-                    usable = False
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            if usable and mins:
-                per_field[f["id"]] = (min(mins), max(maxs))
-        out[fp] = (md.num_rows, per_field)
-    return out
-
-
 def _dataset_file_entries(
     spark, location: str, data_dir: str, spec_fields: list[dict],
     ice_schema: dict, with_bounds: bool, sid: int, seq: int,
@@ -2109,11 +2046,9 @@ def _dataset_file_entries(
     from the parquet FOOTERS driver-side (r13 opt — O(files) metadata
     work, no Spark job; previously ONE distributed aggregation whose
     scan+shuffle+collect cost ~1.1 s per write at sf0.1), falling back
-    to the distributed aggregation if any footer is unreadable.
-    Partition values parse from the ``_p_{name}=value`` directory
-    components."""
-    import urllib.parse
-
+    to the distributed aggregation if any footer is unreadable. The
+    bound-eligible types (``_BOUND_PACK``) are fixed-width primitives,
+    whose footer statistics are exact, never truncated."""
     files = sorted(fsio.walk_files(data_dir, suffix=".parquet"))
     if not files:
         raise ValueError("write produced no data files")
@@ -2134,11 +2069,18 @@ def _dataset_file_entries(
         and f["type"] not in ("float", "double")
     ]
     try:
-        footer = _footer_file_stats(files, bound_fields)
-    except (ImportError, OSError, KeyError, ValueError, IndexError) as exc:
-        # narrow fallback set (r14, advice): a programming error in the
-        # footer path must SURFACE, not silently degrade into the slow
-        # distributed aggregation forever
+        stats = {}
+        for fp in files:
+            n_rows, bounds = fsio.footer_bounds(fsio.read_footer(fp))
+            stats[fp] = (n_rows, {
+                f["id"]: bounds[f["name"]]
+                for f in bound_fields
+                if f["name"] in bounds
+            })
+    except (OSError, ValueError) as exc:
+        # narrow on purpose: a programming error in the footer path
+        # must SURFACE, not silently degrade into the slow distributed
+        # aggregation forever
         import warnings
 
         warnings.warn(
@@ -2147,59 +2089,11 @@ def _dataset_file_entries(
             RuntimeWarning,
             stacklevel=2,
         )
-        footer = None
-    if footer is not None:
-        entries = []
-        for fp in files:
-            rel_parts = fsio.relpath(fp, location).split("/")
-            part_vals: dict = {}
-            for comp in rel_parts[:-1]:
-                if "=" not in comp:
-                    continue
-                k, _, v = comp.partition("=")
-                for sf in spec_fields:
-                    if k == f"_p_{sf['name']}":
-                        part_vals[sf["name"]] = _typed_partition_value(
-                            urllib.parse.unquote(v), sf["result-type"]
-                        )
-            n_rows, per_field = footer[fp]
-            lo, hi = [], []
-            for f in bound_fields:
-                rng = per_field.get(f["id"])
-                if rng is None:
-                    continue
-                try:
-                    lo.append(
-                        {"key": f["id"], "value": _BOUND_PACK[f["type"]](rng[0])}
-                    )
-                    hi.append(
-                        {"key": f["id"], "value": _BOUND_PACK[f["type"]](rng[1])}
-                    )
-                except (TypeError, ValueError, _struct.error):
-                    continue
-            entries.append(
-                {
-                    "status": STATUS_ADDED,
-                    "snapshot_id": sid,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": {
-                        "content": FILE_CONTENT_DATA,
-                        "file_path": fsio.absolutize(fp),
-                        "file_format": "PARQUET",
-                        "partition": part_vals,
-                        "record_count": n_rows,
-                        "file_size_in_bytes": fsio.file_size(fp),
-                        "block_size_in_bytes": 67108864,
-                        "lower_bounds": lo or None,
-                        "upper_bounds": hi or None,
-                        "equality_ids": None,
-                    },
-                }
-            )
-        return entries
-    return _dataset_file_entries_agg(
-        spark, location, files, spec_fields, bound_fields, sid, seq
+        return _dataset_file_entries_agg(
+            spark, location, files, spec_fields, bound_fields, sid, seq
+        )
+    return _data_file_entries(
+        location, files, spec_fields, bound_fields, stats, sid, seq
     )
 
 
@@ -2225,46 +2119,67 @@ def _dataset_file_entries_agg(
         .agg(*aggs)
         .collect()
     )
-    stats = {
-        urllib.parse.unquote(urllib.parse.urlparse(r._fp).path): r
+    by_local = {
+        urllib.parse.unquote(urllib.parse.urlparse(r._fp).path): (
+            int(r["_cnt"]),
+            {
+                f["id"]: (r[f"_lo_{f['id']}"], r[f"_hi_{f['id']}"])
+                for f in bound_fields
+                if r[f"_lo_{f['id']}"] is not None
+                and r[f"_hi_{f['id']}"] is not None
+            },
+        )
         for r in stat_rows
     }
+    # a file with no rows yields no group row: count 0, no bounds
+    stats = {
+        fp: by_local.get(
+            urllib.parse.unquote(
+                urllib.parse.urlparse(fsio.absolutize(fp)).path
+            ),
+            (0, {}),
+        )
+        for fp in files
+    }
+    return _data_file_entries(
+        location, files, spec_fields, bound_fields, stats, sid, seq
+    )
 
-    def _typed_dir_value(raw: str, rtype: str):
-        raw = urllib.parse.unquote(raw)
-        return _typed_partition_value(raw, rtype)
+
+def _data_file_entries(
+    location: str, files: list[str], spec_fields: list[dict],
+    bound_fields: list[dict], stats: dict, sid: int, seq: int,
+) -> list[dict]:
+    """ADDED data-file entries of ``files`` from per-file
+    ``stats[fp] = (record_count, {field-id: (min, max)})``; partition
+    values parse from the ``_p_{name}=value`` directory components."""
+    import urllib.parse
 
     entries = []
     for fp in files:
-        rel_parts = fsio.relpath(fp, location).split("/")
         part_vals: dict = {}
-        for comp in rel_parts[:-1]:
+        for comp in fsio.relpath(fp, location).split("/")[:-1]:
             if "=" not in comp:
                 continue
             k, _, v = comp.partition("=")
             for sf in spec_fields:
                 if k == f"_p_{sf['name']}":
-                    part_vals[sf["name"]] = _typed_dir_value(
-                        v, sf["result-type"]
+                    part_vals[sf["name"]] = _typed_partition_value(
+                        urllib.parse.unquote(v), sf["result-type"]
                     )
-        local = urllib.parse.unquote(
-            urllib.parse.urlparse(fsio.absolutize(fp)).path
-        )
-        st = stats.get(local)
-        lo, hi = None, None
-        if st is not None and bound_fields:
-            lo, hi = [], []
-            for f in bound_fields:
-                lv, hv = st[f"_lo_{f['id']}"], st[f"_hi_{f['id']}"]
-                if lv is None or hv is None:
-                    continue
-                lo.append(
-                    {"key": f["id"], "value": _BOUND_PACK[f["type"]](lv)}
-                )
-                hi.append(
-                    {"key": f["id"], "value": _BOUND_PACK[f["type"]](hv)}
-                )
-            lo, hi = (lo or None), (hi or None)
+        n_rows, per_field = stats[fp]
+        lo, hi = [], []
+        for f in bound_fields:
+            rng = per_field.get(f["id"])
+            if rng is None:
+                continue
+            pack = _BOUND_PACK[f["type"]]
+            try:
+                lo_b, hi_b = pack(rng[0]), pack(rng[1])
+            except (TypeError, ValueError, _struct.error):
+                continue
+            lo.append({"key": f["id"], "value": lo_b})
+            hi.append({"key": f["id"], "value": hi_b})
         entries.append(
             {
                 "status": STATUS_ADDED,
@@ -2276,11 +2191,11 @@ def _dataset_file_entries_agg(
                     "file_path": fsio.absolutize(fp),
                     "file_format": "PARQUET",
                     "partition": part_vals,
-                    "record_count": int(st["_cnt"]) if st is not None else 0,
+                    "record_count": n_rows,
                     "file_size_in_bytes": fsio.file_size(fp),
                     "block_size_in_bytes": 67108864,
-                    "lower_bounds": lo,
-                    "upper_bounds": hi,
+                    "lower_bounds": lo or None,
+                    "upper_bounds": hi or None,
                     "equality_ids": None,
                 },
             }

@@ -56,7 +56,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hudi_and_delta_showcase_spark.operators.cdc import precombine_dedup
-from hudi_and_delta_showcase_spark.operators.upsert import key_match
+from hudi_and_delta_showcase_spark.operators.upsert import (
+    _quote_ident,
+    key_match,
+)
+from hudi_and_delta_showcase_spark.tables import delta_log as dl
 from hudi_and_delta_showcase_spark.tables import fsio
 from hudi_and_delta_showcase_spark.tables import manifest as mf
 
@@ -84,24 +88,17 @@ META_LOCK_TAKEOVER_SECONDS = 30.0
 
 def _distributed_copy(spark, pairs: list[tuple[str, str]]) -> None:
     """Byte-copy (src, dst) file pairs as a Spark job — one partition
-    per slice of files, pyarrow.fs inside the task (py4j/Hadoop is
-    driver-only; pyarrow's URI-aware filesystems work in executors for
+    per slice of files, ``fsio.arrow_fs`` inside the task (py4j/Hadoop
+    is driver-only; pyarrow's filesystems work in executors for
     file/s3/gcs/hdfs). Parent dirs are created per task; 8 MiB chunked
     streaming keeps executor memory flat on arbitrarily large files."""
     if not pairs:
         return
 
     def copy_slice(it):
-        import pyarrow.fs as pafs
-
-        def fs_of(p):
-            if "://" not in p:
-                return pafs.LocalFileSystem(), p
-            return pafs.FileSystem.from_uri(p)
-
         for src, dst in it:
-            sfs, sp = fs_of(src)
-            dfs, dp = fs_of(dst)
+            sfs, sp = fsio.arrow_fs(src)
+            dfs, dp = fsio.arrow_fs(dst)
             parent = dp.rsplit("/", 1)[0]
             dfs.create_dir(parent, recursive=True)
             with sfs.open_input_stream(sp) as r:
@@ -128,7 +125,7 @@ VACUUM_DISTRIBUTED_THRESHOLD = 64
 
 
 def _distributed_remove(spark, paths: list[str]) -> int:
-    """Delete files as a Spark job — same executor-side pyarrow.fs
+    """Delete files as a Spark job — same executor-side ``arrow_fs``
     pattern as ``_distributed_copy``. Already-missing files are
     tolerated (a racing vacuum or lifecycle rule got there first; the
     outcome is identical)."""
@@ -136,15 +133,8 @@ def _distributed_remove(spark, paths: list[str]) -> int:
         return 0
 
     def rm_slice(it):
-        import pyarrow.fs as pafs
-
-        def fs_of(p):
-            if "://" not in p:
-                return pafs.LocalFileSystem(), p
-            return pafs.FileSystem.from_uri(p)
-
         for p in it:
-            fs, pp = fs_of(p)
+            fs, pp = fsio.arrow_fs(p)
             try:
                 fs.delete_file(pp)
             except FileNotFoundError:
@@ -798,7 +788,10 @@ class LakehouseTable:
                 data = data.withColumnRenamed(
                     "_hl_instant", "_hoodie_commit_time"
                 )
-            log_files = table._write_files(data, "l00000", log=True)
+            # one task writes the few adopted records: one log file
+            log_files = table._write_files(
+                data.coalesce(1), "l00000", log=True
+            )
             logs.unpersist()
         stats = {"converted_files": len(files), "source_format": "hoodie"}
         if log_paths:
@@ -856,8 +849,6 @@ class LakehouseTable:
         unpartitioned (their partition record lives in
         ``partitionValues``, which ``convert``'s path-derived reads
         cannot see)."""
-        from hudi_and_delta_showcase_spark.tables import delta_log as dl
-
         path = cls._unclaimed(path, table_type)
         meta_d, files, adds = dl.adopt_delta_snapshot(path)
         if not files:
@@ -1751,20 +1742,17 @@ class LakehouseTable:
                 # keep their freshly-stamped id. Runs BEFORE the merge
                 # and CDC classify so post-images carry the stable id.
                 pre = target.select(
-                    *[F.col(f"t.{c}").alias(f"__rk_{c}") for c in keys],
+                    *[F.col(f"t.{c}") for c in keys],
                     F.col("t._row_id").alias("__old_rid"),
-                )
-                icond = None
-                for c in keys:
-                    e = F.col(c).eqNullSafe(F.col(f"__rk_{c}"))
-                    icond = e if icond is None else icond & e
+                ).alias("p")
                 stamped = (
-                    stamped.join(pre, icond, "left")
+                    stamped.alias("s")
+                    .join(pre, key_match(keys, "p", "s"), "left")
+                    .select("s.*", "__old_rid")
                     .withColumn(
-                        "_row_id",
-                        F.coalesce(F.col("__old_rid"), F.col("_row_id")),
+                        "_row_id", F.coalesce("__old_rid", "_row_id")
                     )
-                    .drop("__old_rid", *[f"__rk_{c}" for c in keys])
+                    .drop("__old_rid")
                 )
             # precombine already made the keys unique, and a left-anti
             # join ignores duplicates anyway: no distinct
@@ -2667,14 +2655,13 @@ class LakehouseTable:
         projection whose expressions are SQL text: ~30 py4j round trips,
         where Column-API expressions and a ``withColumn`` per column
         cost ~95."""
-        def q(c: str) -> str:
-            return "`" + c.replace("`", "``") + "`"
-
-        key = ", ".join(f"cast({q(k)} as string)" for k in self.key_cols)
+        key = ", ".join(
+            f"cast({_quote_ident(k)} as string)" for k in self.key_cols
+        )
         # a global-index delete stamps a keys-only frame that carries no
         # partition column; its _hoodie_partition_path is never read
         pp = (
-            f"cast({q(self.partition_by)} as string)"
+            f"cast({_quote_ident(self.partition_by)} as string)"
             if self.partition_by and self.partition_by in df.columns
             else "''"
         )
@@ -2747,14 +2734,12 @@ class LakehouseTable:
         each) plus, on ``bloom_index`` / ``bloom_columns`` tables, the
         blooms (one extra scan of just-written data). Carried files
         keep their entries through ``mf.next_commit``."""
-        row_counts: dict[str, int] = {}
-        stats = self._file_column_stats(new_files, counts_out=row_counts)
+        row_counts, col_stats = self._file_column_stats(new_files)
         key_ranges = {
             f: c["_hoodie_record_key"]
-            for f, c in stats.items()
+            for f, c in col_stats.items()
             if "_hoodie_record_key" in c
         }
-        col_stats = dict(stats)
         key_blooms: dict[str, str] = {}
         column_blooms: dict[str, dict[str, str]] = {}
         cols = (["_hoodie_record_key"] if self.bloom_index else []) + list(
@@ -2802,88 +2787,33 @@ class LakehouseTable:
         }
 
     def _file_column_stats(
-        self,
-        rel_files: list[str],
-        cols: list[str] | None = None,
-        counts_out: dict[str, int] | None = None,
-    ) -> dict[str, dict[str, list]]:
-        """Column-stats index (Hudi col-stats / Delta data skipping):
-        per-file [min, max] for each requested column, harvested from
-        parquet footers in one pass per file. JSON-stable scalar
-        types record directly (str/int/float/bool); timestamp/date
-        footer stats record as ISO-8601 strings (r12 — JSON-stable,
-        lexicographically time-ordered, coerced back at compare time
-        by ``_interval_can_match``'s temporal rule so ts-range
-        data-skipping works on ingest tables); other types are left
-        unindexed and scanned conservatively.
-
-        ``counts_out`` (if given) receives each readable file's EXACT
-        footer row count — the same single footer open feeds both
-        indexes, so metadata-only COUNT(*) costs no extra IO."""
-        import pyarrow.parquet as pq
-
+        self, rel_files: list[str]
+    ) -> tuple[dict[str, int], dict[str, dict[str, list]]]:
+        """``({file: row count}, {file: {column: [min, max]}})`` of
+        ``rel_files`` from one footer read each: the exact row counts
+        (metadata-only COUNT(*)) and the column-stats index (Hudi
+        col-stats / Delta data skipping) over the first 32 columns.
+        Bounds record as ``dl._json_bound`` scalars, timestamps and
+        dates as ISO-8601 strings (coerced back at compare time by
+        ``_interval_can_match``'s temporal rule); other types, and
+        every column of a file whose footer cannot be read, are left
+        unindexed and scanned conservatively."""
+        counts: dict[str, int] = {}
         out: dict[str, dict[str, list]] = {}
-        ok = (str, int, float, bool, datetime.date)  # datetime is a date
         for rel in rel_files:
-            src = fsio.resolve(self.path, rel)
             try:
-                if fsio.is_remote(src):
-                    # footer read via pyarrow's own URI-aware FS layer
-                    # (file/s3/gcs/hdfs); unsupported schemes fall back
-                    # to "unindexed" = conservative full scan
-                    import pyarrow.fs as pafs
-
-                    pfs, ppath = pafs.FileSystem.from_uri(src)
-                    with pfs.open_input_file(ppath) as fh:
-                        md = pq.ParquetFile(fh).metadata
-                else:
-                    md = pq.ParquetFile(src).metadata
-            except Exception:
+                md = fsio.read_footer(fsio.resolve(self.path, rel))
+            except (OSError, ValueError):
                 continue
-            if counts_out is not None:
-                counts_out[rel] = md.num_rows
-            names = md.schema.names
-            # cols=None: index every scalar column, capped at 32 like
-            # Delta's default stats collection
-            wanted = cols if cols is not None else names[:32]
-            per_col: dict[str, list] = {}
-            for col in wanted:
-                if col not in names:
-                    continue
-                idx = names.index(col)
-                mins, maxs = [], []
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if (
-                        st is None
-                        or st.min is None
-                        or st.max is None
-                        or not isinstance(st.min, ok)
-                    ):
-                        mins, maxs = [], []
-                        break
-                    mins.append(st.min)
-                    maxs.append(st.max)
-                if mins:
-                    lo, hi = min(mins), max(maxs)
-                    if isinstance(lo, datetime.datetime):
-                        # naive UTC before serializing: aware bounds
-                        # would re-parse aware and never compare
-                        # against the engine's naive literals
-                        if lo.tzinfo is not None:
-                            lo = lo.astimezone(
-                                datetime.timezone.utc
-                            ).replace(tzinfo=None)
-                            hi = hi.astimezone(
-                                datetime.timezone.utc
-                            ).replace(tzinfo=None)
-                        lo, hi = lo.isoformat(), hi.isoformat()
-                    elif isinstance(lo, datetime.date):
-                        lo, hi = lo.isoformat(), hi.isoformat()
+            counts[rel], bounds = fsio.footer_bounds(md, 32)
+            per_col = {}
+            for col, (lo, hi) in bounds.items():
+                lo, hi = dl._json_bound(lo), dl._json_bound(hi)
+                if lo is not None:
                     per_col[col] = [lo, hi]
             if per_col:
                 out[rel] = per_col
-        return out
+        return counts, out
 
     def read_where(
         self,

@@ -160,3 +160,22 @@ def test_deep_clone_copies_mor_logs(spark, tmp_path):
     shutil.rmtree(src.path)
     got = [(r.k, r.v) for r in c.read_rt().select("k", "v").collect()]
     assert got == [(1, "a2")]
+
+
+@pytest.mark.parametrize("scheme", ["file:", "file://"])
+def test_distributed_copy_and_remove_take_file_uris(spark, tmp_path, scheme):
+    """Deep clone and large vacuums run ``_distributed_copy`` /
+    ``_distributed_remove`` inside Spark tasks; both must take Hadoop's
+    ``file:/x`` root form as well as ``file:///x``."""
+    from hudi_and_delta_showcase_spark.tables.lakehouse import (
+        _distributed_copy,
+        _distributed_remove,
+    )
+
+    src = tmp_path / "src.bin"
+    src.write_bytes(b"lakehouse" * 1000)
+    dst = tmp_path / "out" / "dst.bin"
+    _distributed_copy(spark, [(f"{scheme}{src}", f"{scheme}{dst}")])
+    assert dst.read_bytes() == src.read_bytes()
+    assert _distributed_remove(spark, [f"{scheme}{dst}"]) == 1
+    assert not dst.exists()

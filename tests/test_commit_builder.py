@@ -5,7 +5,9 @@ survive every action, schema and column mapping carried unless the
 action changes them, and no deletion vector or record-index sidecar of
 the parent surviving a full rewrite. ``next_commit`` is the only
 commit builder: no module but ``tables/manifest.py`` constructs a
-``Commit``."""
+``Commit``. Likewise ``tables/fsio.py`` is the one parquet footer
+reader: no other module resolves a pyarrow filesystem or opens a
+footer."""
 
 from __future__ import annotations
 
@@ -106,21 +108,58 @@ def test_every_derived_commit_keeps_the_invariants(spark, tmp_path):
     assert restored.table_schema == v2.table_schema
 
 
+def _package_nodes(owner: str):
+    """``(file:line, node)`` for every ast node of the package's
+    modules except ``owner``'s."""
+    pkg = pathlib.Path(mf.__file__).resolve().parents[1]
+    owner_path = pathlib.Path(owner).resolve()
+    for path in sorted(pkg.rglob("*.py")):
+        if path == owner_path:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            yield f"{path.relative_to(pkg)}:{getattr(node, 'lineno', 0)}", node
+
+
 def test_commit_is_built_only_in_the_manifest_module():
     """Every writer derives its commits through ``mf.next_commit``
     (version 0 from the empty table): a ``Commit(...)`` or
     ``x.Commit(...)`` call anywhere else in the package is a second
     commit builder."""
-    pkg = pathlib.Path(mf.__file__).resolve().parents[1]
-    builder = pathlib.Path(mf.__file__).resolve()
-    offenders = []
-    for path in sorted(pkg.rglob("*.py")):
-        if path == builder:
-            continue
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if isinstance(node, ast.Call) and (
-                getattr(node.func, "id", None) == "Commit"
-                or getattr(node.func, "attr", None) == "Commit"
-            ):
-                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    offenders = [
+        where
+        for where, node in _package_nodes(mf.__file__)
+        if isinstance(node, ast.Call) and (
+            getattr(node.func, "id", None) == "Commit"
+            or getattr(node.func, "attr", None) == "Commit"
+        )
+    ]
+    assert offenders == []
+
+
+def test_parquet_files_open_only_in_fsio():
+    """``tables/fsio.py`` is the one module that resolves a pyarrow
+    filesystem or opens a parquet footer: an ``import pyarrow.fs``
+    (or ``from pyarrow import fs``), a ``ParquetFile(...)`` or a
+    ``read_schema(...)``/``read_metadata(...)`` call anywhere else in
+    the package is a second footer reader. Reading a parquet blob
+    from memory (``pq.read_table(BytesIO)``) is not a file open."""
+
+    def opens(node) -> bool:
+        if isinstance(node, ast.Import):
+            return any(a.name == "pyarrow.fs" for a in node.names)
+        if isinstance(node, ast.ImportFrom):
+            return node.module == "pyarrow.fs" or (
+                node.module == "pyarrow"
+                and any(a.name == "fs" for a in node.names)
+            )
+        if isinstance(node, ast.Call):
+            name = getattr(node.func, "id", None) or getattr(
+                node.func, "attr", None
+            )
+            return name in ("ParquetFile", "read_schema", "read_metadata")
+        return False
+
+    offenders = [
+        where for where, node in _package_nodes(fsio.__file__) if opens(node)
+    ]
     assert offenders == []

@@ -76,6 +76,8 @@ def test_adopts_mor_timeline(spark, tmp_path):
     assert t.table_type == "mor"
     c = t._commit(None)
     assert c.log_files and c.stats["adopted_log_files"] == 2
+    # the adopted records land in one log file, run after run
+    assert len(c.log_files) == 1
     got = sorted(
         (r.k, r.v, r.sq) for r in t.read().select("k", "v", "sq").collect()
     )

@@ -118,6 +118,51 @@ def test_existing_entries_carry_stable_counts(spark, tmp_path):
     assert all(e["data_file"]["record_count"] >= 1 for e in by_status.values())
 
 
+def test_export_takes_new_file_counts_from_the_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """New data files take their record counts from the manifest's
+    ``row_counts``: an export over recorded commits opens no footer,
+    and every data entry's count is its file's footer count."""
+    from hudi_and_delta_showcase_spark.tables import fsio
+
+    footers = []
+    read_footer = fsio.read_footer
+    monkeypatch.setattr(
+        fsio, "read_footer", lambda p: footers.append(p) or read_footer(p)
+    )
+    schema = "k int, p string, v string, sq int"
+    t = LakehouseTable.create(
+        spark, str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(i, f"p{i % 3}", "v", 1) for i in range(12)], schema
+        ),
+        key_cols=["k"], precombine="sq", partition_by="p",
+    )
+    for c in (1, 2):
+        t.upsert(spark.createDataFrame(
+            [(i, f"p{i % 3}", f"v{c}", c + 1) for i in range(c, 16, 5)],
+            schema,
+        ))
+    footers.clear()
+    export_iceberg_metadata(t)
+    assert footers == []
+    meta = read_iceberg_metadata(t.path)
+    assert len(meta["snapshots"]) == 3
+    checked = 0
+    for snap in meta["snapshots"]:
+        _, manifests = ocf_decode(open(snap["manifest-list"], "rb").read())
+        for m in manifests:
+            _, entries = ocf_decode(open(m["manifest_path"], "rb").read())
+            for e in entries:
+                f = e["data_file"]
+                assert f["record_count"] == read_footer(
+                    f["file_path"]
+                ).num_rows
+                checked += 1
+    assert checked
+
+
 def test_refuses_uncompacted_mor(spark, tmp_path):
     df = spark.createDataFrame([(1, "a", 1)], "k int, v string, sq int")
     t = LakehouseTable.create(
